@@ -11,7 +11,9 @@ declaratively.
 
 Scale note: parquet scans partition by file/row-group; at 100 TB the same
 code path works unchanged because nothing here materializes — callers get
-a logical plan, not data.
+a logical plan, not data. A table's schema is resolved once per session
+per file (``sources.io.read_parquet``), so only the first load of a table
+in a session pays Spark's footer-reading job; later loads start none.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources.io import read_parquet
 
 #: Every table the driver generates (TESTDATA.md).
 TABLES = (
@@ -61,12 +65,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import types as T
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):  # nanos-as-long file
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

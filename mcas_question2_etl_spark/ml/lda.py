@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def lda_two_feature(
@@ -35,18 +36,27 @@ def lda_two_feature(
     w·x > c — ties break to class 0, identically in both engines).
     Output (one row): n0, n1, w1, w2, threshold, fisher_j,
     accuracy."""
-    pts = df.select(
+    # DECIMAL features keep their type through the moment sums, which
+    # are then exact and so independent of partitioning; they become
+    # double only after the aggregate. Other features are summed as
+    # doubles (exact for integers below 2^53, order-dependent otherwise).
+    def feature(name: str):
+        c = F.col(name)
+        is_dec = isinstance(df.select(name).schema[0].dataType, T.DecimalType)
+        return c if is_dec else c.cast("double")
+
+    moments = df.select(
         F.when(label_pred, 1).otherwise(0).alias("__c"),
-        F.col(x1).cast("double").alias("__x1"),
-        F.col(x2).cast("double").alias("__x2"),
+        feature(x1).alias("__x1"),
+        feature(x2).alias("__x2"),
     )
-    m = pts.groupBy("__c").agg(
+    m = moments.groupBy("__c").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("__x1").alias("s1"),
-        F.sum("__x2").alias("s2"),
-        F.sum(F.col("__x1") * F.col("__x1")).alias("s11"),
-        F.sum(F.col("__x1") * F.col("__x2")).alias("s12"),
-        F.sum(F.col("__x2") * F.col("__x2")).alias("s22"),
+        F.sum("__x1").cast("double").alias("s1"),
+        F.sum("__x2").cast("double").alias("s2"),
+        F.sum(F.col("__x1") * F.col("__x1")).cast("double").alias("s11"),
+        F.sum(F.col("__x1") * F.col("__x2")).cast("double").alias("s12"),
+        F.sum(F.col("__x2") * F.col("__x2")).cast("double").alias("s22"),
     )
     wide = m.groupBy().pivot("__c", [0, 1]).agg(
         F.max("n").alias("n"),
@@ -91,6 +101,11 @@ def lda_two_feature(
         w2.alias("__w2"),
         thr.alias("__thr"),
         fj.alias("__fj"),
+    )
+    pts = moments.select(
+        "__c",
+        F.col("__x1").cast("double").alias("__x1"),
+        F.col("__x2").cast("double").alias("__x2"),
     )
     scored = pts.crossJoin(F.broadcast(params))
     pred1 = (
@@ -138,17 +153,22 @@ def lda_two_feature_sql(
 ) -> str:
     """DuckDB twin of :func:`lda_two_feature`."""
     return f"""
-    WITH pts AS (
+    WITH moments AS (
       SELECT CASE WHEN {label_pred_sql} THEN 1 ELSE 0 END AS c,
-             CAST({x1} AS DOUBLE) AS x1, CAST({x2} AS DOUBLE) AS x2
+             {x1} AS x1, {x2} AS x2
       FROM {table}
+    ),
+    pts AS (
+      SELECT c, CAST(x1 AS DOUBLE) AS x1, CAST(x2 AS DOUBLE) AS x2
+      FROM moments
     ),
     m AS (
       SELECT c, CAST(COUNT(*) AS BIGINT) AS n,
-             SUM(x1) AS s1, SUM(x2) AS s2,
-             SUM(x1 * x1) AS s11, SUM(x1 * x2) AS s12,
-             SUM(x2 * x2) AS s22
-      FROM pts GROUP BY c
+             CAST(SUM(x1) AS DOUBLE) AS s1, CAST(SUM(x2) AS DOUBLE) AS s2,
+             CAST(SUM(x1 * x1) AS DOUBLE) AS s11,
+             CAST(SUM(x1 * x2) AS DOUBLE) AS s12,
+             CAST(SUM(x2 * x2) AS DOUBLE) AS s22
+      FROM moments GROUP BY c
     ),
     wide AS (
       SELECT MAX(CASE WHEN c = 0 THEN CAST(n AS DOUBLE) END) AS n0,

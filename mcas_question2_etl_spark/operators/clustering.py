@@ -296,6 +296,8 @@ def _cc_two_phase(
         import tempfile
         import uuid
 
+        from ..sources.io import read_parquet
+
         spark = edges.sparkSession
         path = os.path.join(
             tempfile.gettempdir(),
@@ -303,7 +305,7 @@ def _cc_two_phase(
             f"{uuid.uuid4().hex}.parquet",
         )
         rep_edges.write.mode("overwrite").parquet(path)
-        clean = spark.read.parquet(path)
+        clean = read_parquet(spark, path, rep_edges.schema)
         rep_nodes = (
             clean.select(F.col("a").alias("rep"))
             .unionByName(clean.select(F.col("b").alias("rep")))

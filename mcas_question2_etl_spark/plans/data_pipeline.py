@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..sources.io import read_parquet
 from ..operators import (
     chunking,
     clustering,
@@ -653,7 +654,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> temp-parquet path of the resolved
+#: (applicationId, sf_dir) -> (temp-parquet path, schema) of the resolved
 #: component labels. The LSH+verify edge stage plus CC iteration is
 #: the shared 2/3 of BOTH CC-family specs (neardup_cluster_dedup here,
 #: dedup_keep_longest in wave21) — VERDICT r3 #5 says compute it once
@@ -672,8 +673,8 @@ def _neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir)
-    path = _COMPONENTS_MEMO.get(key)
-    if path is None:
+    memo = _COMPONENTS_MEMO.get(key)
+    if memo is None:
         docs = load_table(spark, sf_dir, "documents")
         edges = dedup.verified_lsh_edges(
             docs, id_col="doc_id", text_col="text", n=3, max_bucket=100,
@@ -688,8 +689,8 @@ def _neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             tempfile.gettempdir(), f"mcas_cc_{app_id}_{safe_sf}.parquet"
         )
         comp.write.mode("overwrite").parquet(path)
-        _COMPONENTS_MEMO[key] = path
-    return spark.read.parquet(path)
+        memo = _COMPONENTS_MEMO[key] = (path, comp.schema)
+    return read_parquet(spark, *memo)
 
 
 @_spec(

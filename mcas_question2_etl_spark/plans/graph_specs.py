@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from ..catalog import load_table
+from ..sources.io import read_parquet
 from ..operators import graph_metrics as _graph
 from ..operators.sampling import budget_head, hash_bucket, hash_bucket_sql
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +43,7 @@ def _spec(name: str, oracle: str | None, survey_ref: str):
     return wrap
 
 
-#: (applicationId, sf_dir) -> temp-parquet path of the co-purchase edge
+#: (applicationId, sf_dir) -> (path, schema) of the co-purchase edge
 #: list. SEVEN specs (triangle count, LPA, two-hop reach, clustering
 #: coefficient, rich club, assortativity, k-core) rebuild the identical
 #: (lineitem -> distinct members -> clique-capped pair join -> distinct)
@@ -61,8 +62,8 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     app_id = spark.sparkContext.applicationId
     key = (app_id, sf_dir)
-    path = _COPURCHASE_MEMO.get(key)
-    if path is None:
+    memo = _COPURCHASE_MEMO.get(key)
+    if memo is None:
         li = load_table(spark, sf_dir, "lineitem")
         e = _graph.cooccurrence_edges(
             li, "l_orderkey", "l_partkey", max_group=8
@@ -72,8 +73,8 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             tempfile.gettempdir(), f"mcas_copurchase_{app_id}_{safe_sf}.parquet"
         )
         e.write.mode("overwrite").parquet(path)
-        _COPURCHASE_MEMO[key] = path
-    return spark.read.parquet(path)
+        memo = _COPURCHASE_MEMO[key] = (path, e.schema)
+    return read_parquet(spark, *memo)
 
 
 # ──────────────────────────────────────────────────────────────────────────

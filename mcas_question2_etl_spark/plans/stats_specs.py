@@ -3725,8 +3725,8 @@ _IND_PAIRS_W109 = [
     lda_two_feature_sql(
         "lineitem",
         "l_returnflag = 'R'",
-        "l_quantity",
-        "l_discount",
+        "CAST(l_quantity AS DECIMAL(18,2))",
+        "CAST(l_discount AS DECIMAL(18,2))",
     ),
     "ml op — closed-form Fisher LDA on (quantity, discount) "
     "predicting returned lineitems: pooled within-class scatter from "
@@ -3739,7 +3739,13 @@ _IND_PAIRS_W109 = [
     "moments pass + one scoring scan, no iteration at any scale.",
 )
 def lda_returnflag_axis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
+    # both features are 2-decimal measures: as DECIMAL their moments are
+    # exact, order-free sums (aggregates.MONEY)
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag",
+        F.col("l_quantity").cast(aggregates.MONEY).alias("l_quantity"),
+        F.col("l_discount").cast(aggregates.MONEY).alias("l_discount"),
+    )
     return lda_two_feature(
         li, F.col("l_returnflag") == "R", "l_quantity", "l_discount"
     )

@@ -19,8 +19,45 @@ external database. Swapping in Postgres is a URL + driver change.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+#: (applicationId, path) -> ((st_ino, st_mtime_ns, st_size), schema):
+#: the inferred schema of one parquet path. Per application because the
+#: reader confs that shape the inferred types (``nanosAsLong``,
+#: ``binaryAsString``, ...) are session state; stamped with the file's
+#: identity so a path rewritten in place (new mtime even when the inode
+#: is reused) is inferred again and replaces its stale entry.
+_PARQUET_SCHEMAS: dict = {}
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Parquet scan — the package's only parquet reader.
+
+    Without a schema Spark runs a job that reads the file footers on
+    every ``spark.read.parquet`` call; at about 0.1 s each that job is
+    the largest fixed cost of a short relational read. With ``schema``
+    (a writer that knows what it just wrote) the scan starts no job.
+    Without it the schema is inferred once per session and file
+    version and reused; paths that are not local files (object stores,
+    HDFS) cannot be stat-ed and are inferred on every call.
+    """
+    if schema is None:
+        try:
+            st = os.stat(path)
+        except OSError:
+            return spark.read.parquet(path)
+        key = (spark.sparkContext.applicationId, path)
+        stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+        hit = _PARQUET_SCHEMAS.get(key)
+        if hit is None or hit[0] != stamp:
+            hit = _PARQUET_SCHEMAS[key] = (stamp, spark.read.parquet(path).schema)
+        schema = hit[1]
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_csv(

@@ -13,12 +13,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.io import read_parquet
+
+
 def _events_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Streaming file sources need an explicit schema; infer it from a
-    one-off batch footer read so NANOS-as-long and MICROS files both
-    work (see catalog.load_table)."""
+    """Streaming file sources need an explicit schema; take it from the
+    batch reader (footers read once per session and file) so
+    NANOS-as-long and MICROS files both work (see catalog.load_table)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path).schema
+    return read_parquet(spark, path).schema
 
 
 def stream_events(spark: SparkSession, path: str) -> DataFrame:
@@ -222,7 +225,7 @@ def apply_batch_once(
     retry.
     """
     try:
-        snap = spark.read.parquet(state_path)
+        snap = read_parquet(spark, state_path)
         applied = snap.agg(F.max("__batch_id")).first()[0]
         if applied is not None and applied >= batch_id:
             return False
@@ -240,7 +243,7 @@ def apply_batch_once(
 
 def read_state(spark, state_path: str) -> DataFrame:
     """Read a maintained snapshot without its ``__batch_id`` marker."""
-    snap = spark.read.parquet(state_path)
+    snap = read_parquet(spark, state_path)
     return snap.drop("__batch_id")
 
 
@@ -437,7 +440,7 @@ def maintain_latest_state(
         spark = batch_df.sparkSession
         compacted = latest_by_key(batch_df, list(keys), version_col, tiebreak)
         try:
-            snap = spark.read.parquet(state_path)
+            snap = read_parquet(spark, state_path)
             merged = latest_by_key(
                 snap.unionByName(compacted), list(keys), version_col, tiebreak
             )
