@@ -8,19 +8,23 @@ document per component. This module is that missing middle stage:
 
     pairs (a_id, b_id)  ->  per-node cluster_id (= min doc_id reachable)
 
-Algorithm: iterative min-label propagation ("hash-min"). Every node
-starts labeled with its own id; each round, every node takes the min of
-its label and its neighbors' labels; converged when no label changes.
+Algorithm: two-phase (the partition-local-then-global shape REPOSE,
+ICDE'21, uses for pruning). Each partition first contracts its own
+edges to partition-local components in one Arrow pass; iterative
+min-label propagation ("hash-min": every node takes the min of its
+label and its neighbors' labels until no label changes) then runs only
+on the contracted representative graph, falling back to star
+contraction when the diameter budget runs out.
 
 Scale notes (the 100 TB story):
   * One round = one shuffle of (node, label) pairs on node id — never
     document bodies; the edge list itself is fixed-width ints.
-  * Rounds needed = graph diameter. Near-dup components are dense and
-    tiny (LSH buckets make them clique-ish), so diameter is typically
-    2-4. For adversarial long-chain graphs, the alternating
-    large-star/small-star contraction of Kiveris et al., "Connected
-    Components in MapReduce and Beyond" (SoCC'14), converges in
-    O(log^2 n) and drops in behind the same interface.
+  * Rounds needed = contracted graph diameter. Near-dup components
+    are dense and tiny (LSH buckets make them clique-ish), so diameter
+    is typically 2-4. For adversarial long-chain graphs, the
+    alternating large-star/small-star contraction of Kiveris et al.,
+    "Connected Components in MapReduce and Beyond" (SoCC'14), converges
+    in O(log^2 n) and drops in behind the same interface.
   * Labels only ever decrease, so SUM(label) strictly decreases while
     any node is unconverged — convergence is detected with a single
     scalar aggregate per round instead of a join-and-compare.
@@ -44,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.io import spill
+
 
 def symmetrize(edges: DataFrame, src: str = "a_id", dst: str = "b_id") -> DataFrame:
     """Undirected edge list -> both directions, columns (src, dst)."""
@@ -59,7 +65,6 @@ def connected_components(
     src: str = "a_id",
     dst: str = "b_id",
     max_iter: int = 25,
-    method: str = "auto",
 ) -> DataFrame:
     """Label every node with the MIN node id reachable from it.
 
@@ -68,49 +73,36 @@ def connected_components(
     of a real corpus — come out as singleton clusters without riding
     through any join. Returns (id_col, cluster_id).
 
-    ``method``:
-      * ``"hashmin"`` — min-label propagation + path halving (below);
-        O(log diameter) rounds, cheapest per round. Raises
-        ``RuntimeError`` if ``max_iter`` rounds don't converge: silent
-        partial labels would split clusters, which for dedup means
-        silently keeping duplicates.
-      * ``"hashtomin"`` — Rastogi et al. hash-to-min message passing
-        (:func:`connected_components_hashtomin`); fewer ROUNDS than
-        hash-min on long chains (pointer messages leap label chains)
-        at +2 shuffles per round. The right trade on clusters where
-        the per-round synchronization barrier dominates (1000-executor
-        deployments); on local[N] microbenchmarks the extra shuffles
-        outweigh the saved rounds (measured: 5 rounds/9 s vs
-        8 rounds/5 s on the sf0.1 near-dup graph), which is why it is
-        not the default here.
-      * ``"star"`` — Kiveris et al. alternating large-star/small-star
-        contraction (:func:`connected_components_star`); O(log^2 n)
-        rounds REGARDLESS of diameter or component structure.
-      * ``"auto"`` (default) — two-phase local contraction
-        (:func:`_cc_two_phase`, r9): each partition's edges are
-        union-found LOCALLY in one Arrow pass (no shuffle touches the
-        raw edge list at all — not even the symmetrize+distinct the
-        iterative forms pay), then the message-passing rounds run only
-        on the CONTRACTED representative graph — the boundary
-        components that actually span partitions. On a real corpus
-        that graph is orders of magnitude smaller than the edge list,
-        and the round count is the contracted (not raw) diameter. The
-        contracted rounds use hash-min, falling back to star
-        contraction instead of failing when the diameter budget is
-        exhausted (the old auto semantics).
+    Two-phase local contraction (:func:`_cc_two_phase`): each
+    partition's edges are union-found LOCALLY in one Arrow pass (no
+    shuffle touches the raw edge list at all — not even the
+    symmetrize+distinct the iterative forms pay), then the
+    message-passing rounds run only on the CONTRACTED representative
+    graph — the boundary components that actually span partitions. On
+    a real corpus that graph is orders of magnitude smaller than the
+    edge list, and the round count is the contracted (not raw)
+    diameter. The contracted rounds use
+    :func:`connected_components_hashmin`, falling back to
+    :func:`connected_components_star` instead of failing when
+    ``max_iter`` rounds are exhausted.
     """
-    if method == "star":
-        return connected_components_star(
-            edges, nodes, id_col, src, dst, max_iter=max_iter
-        )
-    if method == "hashtomin":
-        return connected_components_hashtomin(
-            edges, nodes, id_col, src, dst, max_iter=max_iter
-        )
-    if method == "auto":
-        return _cc_two_phase(edges, nodes, id_col, src, dst, max_iter)
-    if method != "hashmin":
-        raise ValueError(f"unknown method {method!r}")
+    return _cc_two_phase(edges, nodes, id_col, src, dst, max_iter)
+
+
+def connected_components_hashmin(
+    edges: DataFrame,
+    nodes: DataFrame,
+    id_col: str = "doc_id",
+    src: str = "a_id",
+    dst: str = "b_id",
+    max_iter: int = 25,
+) -> DataFrame:
+    """Iterative hash-min core: min-label propagation + path halving,
+    O(log diameter) rounds over the whole edge list. Same contract as
+    :func:`connected_components`. Raises ``RuntimeError`` if
+    ``max_iter`` rounds don't converge: silent partial labels would
+    split clusters, which for dedup means silently keeping duplicates.
+    """
     sym = symmetrize(edges, src, dst).distinct().localCheckpoint(eager=False)
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).cast("long").alias("lbl")
@@ -152,8 +144,8 @@ def connected_components(
             )
         prev_sum = cur_sum
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(graph diameter too large — switch to star-contraction)"
+        f"connected_components_hashmin did not converge in {max_iter} "
+        "rounds (graph diameter too large — switch to star-contraction)"
     )
 
 
@@ -222,8 +214,7 @@ def _cc_two_phase(
     dst: str,
     max_iter: int,
 ) -> DataFrame:
-    """Two-phase connected components (the ``method="auto"`` path):
-    partition-local union-find contraction, then min-label rounds on
+    """Two-phase connected components: partition-local union-find contraction, then min-label rounds on
     the contracted representative graph only, then one composition
     join. Output contract identical to the iterative forms: every node
     labelled with the MIN reachable node id; isolated nodes are
@@ -280,45 +271,31 @@ def _cc_two_phase(
     if rep_edges.isEmpty():
         lab = node_min.select("node", F.col("mrep").alias("lbl"))
     else:
-        # Materialize the rep graph to a session-scoped parquet before
-        # handing it to the iterative core (the _COMPONENTS_MEMO
-        # precedent). Besides cutting the explode lineage out of every
-        # round's plan, this matters for robustness: a localCheckpoint
-        # of this plan produces a LogicalRDD whose frozen origin
-        # constraints break Catalyst's constraint rewrite when the
-        # fixed-point loops self-union it (observed
+        # Spill the rep graph to parquet before handing it to the
+        # iterative core. Besides cutting the explode lineage out of
+        # every round's plan, this matters for robustness: a
+        # localCheckpoint of this plan produces a LogicalRDD whose
+        # frozen origin constraints break Catalyst's constraint rewrite
+        # when the fixed-point loops self-union it (observed
         # "java.util.NoSuchElementException: key not found: v#..L"
         # from PruneFilters under ANY session config) — a clean scan
         # has no such baggage. The rep graph is the cross-partition
         # boundary structure, orders of magnitude smaller than the
         # edge list.
-        import os
-        import tempfile
-        import uuid
-
-        from ..sources.io import read_parquet
-
-        spark = edges.sparkSession
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"mcas_cc_repgraph_{spark.sparkContext.applicationId}_"
-            f"{uuid.uuid4().hex}.parquet",
-        )
-        rep_edges.write.mode("overwrite").parquet(path)
-        clean = read_parquet(spark, path, rep_edges.schema)
+        clean = spill(edges.sparkSession, lambda: rep_edges)
         rep_nodes = (
             clean.select(F.col("a").alias("rep"))
             .unionByName(clean.select(F.col("b").alias("rep")))
             .distinct()
         )
         try:
-            rlab = connected_components(
-                clean, rep_nodes, "rep", "a", "b", max_iter, method="hashmin"
+            rlab = connected_components_hashmin(
+                clean, rep_nodes, "rep", "a", "b", max_iter
             )
         except RuntimeError:
             # star's round count is O(log^2 n) regardless of diameter,
             # so the fallback gets its own bound rather than inheriting
-            # a deliberately small one (the old auto semantics)
+            # a deliberately small one
             rlab = connected_components_star(
                 clean, rep_nodes, "rep", "a", "b", max_iter=max(max_iter, 50)
             )
@@ -343,74 +320,6 @@ def _cc_two_phase(
                 "cluster_id"
             ),
         )
-    )
-
-
-def connected_components_hashtomin(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "a_id",
-    dst: str = "b_id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components via hash-to-min message passing (Rastogi
-    et al., "Finding Connected Components in Map-Reduce in Logarithmic
-    Rounds", ICDE'13). Same contract as :func:`connected_components`.
-
-    Per round, every node u forms its candidate set C_u = {lbl(u)} ∪
-    {lbl(v) : v ∈ N(u)}, takes m_u = min(C_u) as its OWN new label
-    floor (this alone is plain hash-min), and ALSO sends m_u to every
-    member of C_u: a node's final label is min(m_u, incoming
-    messages). The pointer messages are the acceleration — a min label
-    leaps through label-pointer chains instead of walking one graph
-    hop per round, so rounds track O(log d) where plain propagation
-    pays the diameter d. (The own-floor term is load-bearing: without
-    it a node whose label no longer equals its id can stop receiving
-    messages and stall at a non-min fixed point — caught by the
-    recursive-CTE oracle in round 4 development.)
-
-    Scale notes: one round = 4 shuffles of fixed-width (node, label)
-    pairs (neighbor-label join, per-node min, message fan-out join,
-    target min); message volume is O(|E| + |V|) per round. Labels are
-    monotone non-increasing and always ids of same-component nodes,
-    so SUM(label) is an exact convergence check, one scalar per round.
-    localCheckpoint per round truncates lineage (executor-local — see
-    the dynamic-allocation caveat above).
-    """
-    sym = symmetrize(edges, src, dst).distinct().localCheckpoint(eager=False)
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).cast("long").alias("lbl")
-    ).localCheckpoint(eager=False)
-    prev_sum = labels.agg(F.sum("lbl")).first()[0]
-    for _ in range(max_iter):
-        nbr = sym.join(
-            labels.withColumnRenamed("node", "dst").withColumnRenamed(
-                "lbl", "dlbl"
-            ),
-            "dst",
-        ).select(F.col("src").alias("node"), F.col("dlbl").alias("lbl"))
-        cand = labels.unionByName(nbr)  # (u, x): x ∈ C_u
-        m = cand.groupBy("node").agg(F.min("lbl").alias("m"))
-        msgs = cand.join(m, "node").select(
-            F.col("lbl").alias("node"), F.col("m").alias("lbl")
-        )
-        own = m.select("node", F.col("m").alias("lbl"))  # hash-min floor
-        labels = (
-            own.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(F.sum("lbl")).first()[0]
-        if cur_sum == prev_sum:  # labels only decrease -> fixed point
-            return labels.select(
-                F.col("node").alias(id_col), F.col("lbl").alias("cluster_id")
-            )
-        prev_sum = cur_sum
-    raise RuntimeError(
-        f"connected_components_hashtomin did not converge in {max_iter} "
-        "rounds (adversarial structure — switch to star-contraction)"
     )
 
 

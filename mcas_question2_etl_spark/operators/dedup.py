@@ -23,6 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fanout import _plan_size_bytes, fan_out
 from .text import fingerprint, normalize_text
 
 # --------------------------------------------------------------------------
@@ -390,48 +391,6 @@ def minhash_neardup_pairs(
     )
 
 
-_SPREAD_PROBE_MAX_BYTES = 1 << 30  # plans bigger than this never need spreading
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the optimized plan — a driver-side
-    stats lookup, far cheaper than the plan->RDD conversion it gates."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # pragma: no cover — exotic plans / py4j drift
-        return None
-
-
-def spread_small_scan(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Repartition a SMALL single-split scan to the session's
-    parallelism before per-row-heavy compute (md5 signatures, shingle
-    arrays). A local parquet table arrives as ONE input split, so an
-    expensive scan-stage projection runs on one core (measured 4x on
-    the sf0.1 signature stage). No-op when the input already has
-    enough partitions — a 100 TB table never takes this shuffle.
-
-    The partition-count probe (`df.rdd.getNumPartitions()`) forces a
-    logical-plan->RDD conversion on the driver, so it only runs when
-    Catalyst's size estimate says the input is small enough that the
-    spread could matter; a large scan (which already has many splits)
-    skips both the probe and the shuffle entirely (ADVICE r4).
-    """
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    size = _plan_size_bytes(df)
-    if size is not None and size > _SPREAD_PROBE_MAX_BYTES:
-        return df
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover — exotic plans; keep the scan
-        return df
-    if n >= par:
-        return df
-    return df.repartition(par, *[F.col(c) for c in key_cols]) if key_cols else df.repartition(par)
-
-
 # Above this estimated shingle-store size the broadcast verify form is
 # refused in "auto" mode: a broadcast table must fit in every executor
 # (and under Spark's 8 GB broadcast hard cap), while the shuffle form
@@ -530,7 +489,7 @@ def verified_lsh_edges(
     (neardup_cluster_dedup / dedup_keep_longest / corpus_prep_full):
 
       * the signature scan is spread across the session's parallelism
-        (:func:`spread_small_scan` — single-split local scans
+        (:func:`fanout.fan_out` — single-split local scans
         otherwise hash 1M+ shingles on one core);
       * verification runs through :func:`verify_candidate_pairs`,
         which picks the broadcast form (shingle map replicated to
@@ -540,7 +499,7 @@ def verified_lsh_edges(
 
     Output: (a_id, b_id, jaccard) with jaccard >= ``min_jaccard``.
     """
-    docs = spread_small_scan(
+    docs = fan_out(
         df.filter(F.length(text_col) >= n).select(F.col(id_col), F.col(text_col)),
         id_col,
     )
@@ -609,9 +568,9 @@ def minhash_ml_banded_pairs(
         )
     # spread the single-split scan first: shingling + HashingTF +
     # the 8-table MinHash transform are the CPU-heavy stages of this
-    # operator and otherwise run on ONE core (spread_small_scan no-ops
+    # operator and otherwise run on ONE core (fan_out no-ops
     # when the input already has enough splits — the 100 TB path)
-    shingled = spread_small_scan(
+    shingled = fan_out(
         df.select(F.col(id_col), F.col(text_col)), id_col
     ).select(
         F.col(id_col), char_ngrams(text_col, n).alias("shingles")
@@ -943,14 +902,14 @@ def minhash_lsh_between(
     """
     # spread both signature scans (round 4): local single-split inputs
     # otherwise hash every shingle on one core
-    cb = minhash_bands(spread_small_scan(corpus, id_col), id_col, text_col, n)
+    cb = minhash_bands(fan_out(corpus, id_col), id_col, text_col, n)
     w = Window.partitionBy("band_idx", "band_key")
     cb = (
         cb.withColumn("__bn", F.count(F.lit(1)).over(w))
         .filter(F.col("__bn") <= max_bucket)
         .drop("__bn")
     )
-    bb = minhash_bands(spread_small_scan(batch, id_col), id_col, text_col, n)
+    bb = minhash_bands(fan_out(batch, id_col), id_col, text_col, n)
     return (
         bb.select(F.col(id_col).alias("batch_id"), "band_idx", "band_key")
         .join(

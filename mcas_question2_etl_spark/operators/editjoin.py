@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fanout import fan_out
+
 
 def deletion_keys(col: str) -> F.Column:
     """array of the string itself plus every single-deletion variant."""
@@ -45,12 +47,10 @@ def edit_distance_pairs(
 ) -> DataFrame:
     """All unordered pairs (a_id < b_id) with lev <= 1 between
     ``str_col`` values: ``(a_id, b_id, a_str, b_str, dist)``."""
-    from .dedup import spread_small_scan
-
     # spread the single-split scan first: the |s|+1 deletion-key
     # explode + per-key xxhash is the heavy stage and otherwise runs
     # on one core (no-op when the scan already has enough splits)
-    df = spread_small_scan(df.select(F.col(id_col), F.col(str_col)), id_col)
+    df = fan_out(df.select(F.col(id_col), F.col(str_col)), id_col)
     # shuffle 8-byte key hashes, not key strings: a hash collision can
     # only ADD a candidate, and the exact levenshtein verify kills it
     keyed = df.select(

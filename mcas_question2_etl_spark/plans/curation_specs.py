@@ -1523,7 +1523,7 @@ _LSH_ORACLE = f"""
 )
 def lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sample = dedup.spread_small_scan(
+    sample = fan_out(
         docs.filter(
             (F.col("doc_id") % _SAMPLE_MOD == 0)
             & (F.col("doc_id") < _SAMPLE_CAP)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from ..catalog import load_table
-from ..sources.io import read_parquet
+from ..sources.io import spill
 from ..operators import graph_metrics as _graph
 from ..operators.sampling import budget_head, hash_bucket, hash_bucket_sql
 from pyspark.sql import DataFrame, SparkSession
@@ -43,38 +43,27 @@ def _spec(name: str, oracle: str | None, survey_ref: str):
     return wrap
 
 
-#: (applicationId, sf_dir) -> (path, schema) of the co-purchase edge
-#: list. SEVEN specs (triangle count, LPA, two-hop reach, clustering
-#: coefficient, rich club, assortativity, k-core) rebuild the identical
-#: (lineitem -> distinct members -> clique-capped pair join -> distinct)
-#: edge list; the rebuild is both redundant work and the suite's main
-#: source of allocation/GC noise (round 4: the family's bench numbers
-#: swung 3-13x with heap state). Session-scoped parquet, same pattern
-#: and rationale as data_pipeline._neardup_components: deterministic
-#: content (a set of (a, b) int pairs), robust to cache eviction, and
-#: exactly what a production pipeline does with a reused intermediate.
-_COPURCHASE_MEMO: dict = {}
-
-
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
+    """The co-purchase edge list, built once per session and sf_dir.
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    memo = _COPURCHASE_MEMO.get(key)
-    if memo is None:
-        li = load_table(spark, sf_dir, "lineitem")
-        e = _graph.cooccurrence_edges(
-            li, "l_orderkey", "l_partkey", max_group=8
-        )
-        safe_sf = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-        path = os.path.join(
-            tempfile.gettempdir(), f"mcas_copurchase_{app_id}_{safe_sf}.parquet"
-        )
-        e.write.mode("overwrite").parquet(path)
-        memo = _COPURCHASE_MEMO[key] = (path, e.schema)
-    return read_parquet(spark, *memo)
+    SEVEN specs (triangle count, LPA, two-hop reach, clustering
+    coefficient, rich club, assortativity, k-core) use the identical
+    (lineitem -> distinct members -> clique-capped pair join ->
+    distinct) edge list; rebuilding it is both redundant work and the
+    suite's main source of allocation/GC noise (round 4: the family's
+    bench numbers swung 3-13x with heap state). Spilled to parquet like
+    data_pipeline._neardup_components: deterministic content (a set of
+    (a, b) int pairs), robust to cache eviction, and exactly what a
+    production pipeline does with a reused intermediate.
+    """
+    return spill(
+        spark,
+        lambda: _graph.cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
+            max_group=8,
+        ),
+        key=("copurchase_edges", sf_dir),
+    )
 
 
 # ──────────────────────────────────────────────────────────────────────────

@@ -27,21 +27,10 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..operators import kmeans as _kmeans
 from ..operators import semdedup as _semdedup
+from ..operators.fanout import fan_out
 from ..registry import QuerySpec
 
 SPECS: list[QuerySpec] = []
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Round-robin a tiny params projection across the cluster's
-    parallelism before a CPU-bound Python codec kernel. The documents
-    dimension reads as ONE parquet split at bench scale, so without
-    this every mapInPandas codec stage serializes on a single core —
-    the r8 bench probe showed the JPEG spec running 1 task on a
-    32-core box. The shuffled rows are a handful of ints per doc;
-    at 100 TB the decode fleet scales with executors, not with the
-    input file count."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _spec(name: str, oracle: str | None, survey_ref: str):
@@ -237,7 +226,7 @@ def multimodal_strict_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    media = _fan_out(docs).mapInPandas(encode, schema=payload_schema)
+    media = fan_out(docs).mapInPandas(encode, schema=payload_schema)
     feats = mm.extract_features(
         media.select("media_id", "media_type", "payload"),
         decoder=mm.strict_decoder,
@@ -686,7 +675,7 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    feats = _fan_out(docs).mapInPandas(encode_decode, schema=out_schema)
+    feats = fan_out(docs).mapInPandas(encode_decode, schema=out_schema)
     return feats.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_gifs"),
         F.sum("width").cast("bigint").alias("sum_width"),
@@ -785,7 +774,7 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    feats = _fan_out(docs).mapInPandas(encode_decode, schema=out_schema)
+    feats = fan_out(docs).mapInPandas(encode_decode, schema=out_schema)
     return feats.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tiffs"),
         F.sum("width").cast("bigint").alias("sum_width"),
@@ -897,7 +886,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    feats = _fan_out(docs).mapInPandas(encode_decode, schema=out_schema)
+    feats = fan_out(docs).mapInPandas(encode_decode, schema=out_schema)
     return feats.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_jpegs"),
         F.sum("width").cast("bigint").alias("sum_width"),
@@ -978,7 +967,7 @@ def audio_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    feats = _fan_out(docs).mapInPandas(roundtrip, schema=out_schema)
+    feats = fan_out(docs).mapInPandas(roundtrip, schema=out_schema)
     return feats.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_samples").cast("bigint").alias("sum_samples"),

@@ -20,7 +20,10 @@ external database. Swapping in Postgres is a URL + driver change.
 from __future__ import annotations
 
 import os
+import uuid
+from collections.abc import Callable, Hashable
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -58,6 +61,43 @@ def read_parquet(
             hit = _PARQUET_SCHEMAS[key] = (stamp, spark.read.parquet(path).schema)
         schema = hit[1]
     return spark.read.schema(schema).parquet(path)
+
+
+#: (applicationId, key) -> (path, schema) of a keyed spill.
+_SPILLS: dict = {}
+
+
+def spill(
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
+    key: Hashable | None = None,
+) -> DataFrame:
+    """Write ``build()`` to parquet and scan it back — the package's
+    only place for intermediate parquet.
+
+    The file goes under the application's SparkFiles root, a directory
+    that ``spark.stop()`` deletes, so no spill outlives its session.
+    The scan passes the schema just written, so it starts no job. With
+    ``key`` the frame is built and written at most once per application
+    and key, and later calls scan the same file; without it every call
+    writes a new file (a lineage cut).
+
+    The root is a driver-local directory: fine in local mode, where
+    every task shares the driver's filesystem; a multi-node cluster
+    needs it on a shared filesystem.
+    """
+    memo_key = (spark.sparkContext.applicationId, key)
+    hit = _SPILLS.get(memo_key) if key is not None else None
+    if hit is None:
+        df = build()
+        path = os.path.join(
+            SparkFiles.getRootDirectory(), f"spill-{uuid.uuid4().hex}.parquet"
+        )
+        df.write.parquet(path)
+        hit = (path, df.schema)
+        if key is not None:
+            _SPILLS[memo_key] = hit
+    return read_parquet(spark, *hit)
 
 
 def read_csv(

@@ -574,20 +574,22 @@ def test_connected_components_direction_independent(spark):
 def test_connected_components_nonconvergence_raises(spark):
     import pytest
 
-    from mcas_question2_etl_spark.operators.clustering import connected_components
+    from mcas_question2_etl_spark.operators.clustering import (
+        connected_components_hashmin,
+    )
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], ["a_id", "b_id"]
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, nodes, max_iter=2, method="hashmin")
+        connected_components_hashmin(edges, nodes, max_iter=2)
 
 
 def test_connected_components_auto_falls_back_to_star(spark):
-    """method='auto' must survive a diameter budget the hash-min core
-    can't: same chain as the raise test, but the star fallback labels
-    it correctly instead of failing."""
+    """connected_components must survive a diameter budget the hash-min
+    core can't: same chain as the raise test, but the star fallback
+    labels it correctly instead of failing."""
     from mcas_question2_etl_spark.operators.clustering import connected_components
 
     edges = spark.createDataFrame(
@@ -629,7 +631,7 @@ def test_star_contraction_matches_hashmin_mixed_graph(spark):
     chain, reversed edges, self-referential duplicates, and isolated
     nodes."""
     from mcas_question2_etl_spark.operators.clustering import (
-        connected_components,
+        connected_components_hashmin,
         connected_components_star,
     )
 
@@ -644,7 +646,7 @@ def test_star_contraction_matches_hashmin_mixed_graph(spark):
         [(i,) for i in [1, 2, 3, 10, 11, 12, 20, 21, 30, 31, 40]], ["doc_id"]
     )
     a = {r.doc_id: r.cluster_id
-         for r in connected_components(edges, nodes, method="hashmin").collect()}
+         for r in connected_components_hashmin(edges, nodes).collect()}
     b = {r.doc_id: r.cluster_id
          for r in connected_components_star(edges, nodes).collect()}
     assert a == b

@@ -107,29 +107,39 @@ def test_events_nanos_path(spark, tmp_path):
 
 
 _NEW_SESSION = """
-import json, sys, uuid
+import json, os, sys, uuid
 from mcas_question2_etl_spark.catalog import load_table
+from mcas_question2_etl_spark.plans.graph_specs import copurchase_edges
 from mcas_question2_etl_spark.session import get_spark
 
-def jobs(spark):
+def jobs(spark, fn):
     sc = spark.sparkContext
     group = uuid.uuid4().hex
     sc.setJobGroup(group, group)
-    load_table(spark, sys.argv[1], "region")
+    fn()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
-counts = []
+sf = sys.argv[1]
+sessions = []
 for _ in range(2):
     spark = get_spark(app_name="read-parquet-new-session")
-    counts += [jobs(spark), jobs(spark)]
+    load = lambda: load_table(spark, sf, "region")
+    edges = lambda: copurchase_edges(spark, sf)
+    counts = [jobs(spark, load), jobs(spark, load),
+              jobs(spark, edges), jobs(spark, edges)]
+    spill = os.path.dirname(edges().inputFiles()[0])
     spark.stop()
-print(json.dumps(counts))
+    sessions.append([counts, spill, os.path.exists(spill)])
+print(json.dumps(sessions))
 """
 
 
 def test_new_session_infers_again():
+    """A new session infers table schemas and builds the co-purchase
+    spill again; within a session both are reused without a job, and
+    ``spark.stop()`` removes the spill."""
     env = dict(
         os.environ, PYTHONPATH=ROOT, SPARK_GRAFT_CPUS="1",
         SPARK_GRAFT_DRIVER_MEM="1g",
@@ -138,8 +148,10 @@ def test_new_session_infers_again():
         [sys.executable, "-c", _NEW_SESSION, SF_SMALL], cwd=ROOT, env=env,
         capture_output=True, text=True, timeout=600, check=True,
     )
-    first, again, new_first, new_again = json.loads(
-        out.stdout.strip().splitlines()[-1]
-    )
-    assert first >= 1 and new_first >= 1
-    assert again == 0 and new_again == 0
+    sessions = json.loads(out.stdout.strip().splitlines()[-1])
+    for counts, _, spill_left in sessions:
+        load, load_again, build, build_again = counts
+        assert load >= 1 and load_again == 0
+        assert build >= 1 and build_again == 0
+        assert not spill_left
+    assert sessions[0][1] != sessions[1][1]

@@ -522,7 +522,7 @@ def test_star_contraction_matches_hashmin_and_unionfind(spark, edges):
     the input; the node universe is every endpoint plus two guaranteed
     isolates)."""
     from mcas_question2_etl_spark.operators.clustering import (
-        connected_components,
+        connected_components_hashmin,
         connected_components_star,
     )
 
@@ -553,7 +553,7 @@ def test_star_contraction_matches_hashmin_and_unionfind(spark, edges):
         edf = spark.createDataFrame([], "a_id long, b_id long")
     # self-loops: the star core filters u==v; hash-min tolerates them
     hm = {r.doc_id: r.cluster_id
-          for r in connected_components(edf, nodes, method="hashmin").collect()}
+          for r in connected_components_hashmin(edf, nodes).collect()}
     star = {r.doc_id: r.cluster_id
             for r in connected_components_star(edf, nodes).collect()}
     assert hm == want

@@ -1,5 +1,5 @@
 """r9 optimization: two-phase connected components (partition-local
-union-find contraction + rep-graph rounds) behind method="auto".
+union-find contraction + rep-graph rounds) behind connected_components.
 
 The rewrite changes HOW labels are computed, not what they are: these
 tests pin the output against the iterative hashmin core and a chain
@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from mcas_question2_etl_spark.operators.clustering import (
     _local_contract,
     connected_components,
+    connected_components_hashmin,
 )
 
 
@@ -32,8 +33,8 @@ def test_two_phase_scattered_chain_matches_hashmin(spark):
     }
     hm = {
         r.doc_id: r.cluster_id
-        for r in connected_components(
-            edges, nodes, method="hashmin", max_iter=25
+        for r in connected_components_hashmin(
+            edges, nodes, max_iter=25
         ).collect()
     }
     assert auto == hm
