@@ -73,10 +73,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, table_path(sf_dir, name))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every catalog table as a temp view for spark.sql()."""
     for name in TABLES:

@@ -39,10 +39,6 @@ def oracle_money_sum(col: str) -> str:
     return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
 
 
-def oracle_money_avg(col: str) -> str:
-    return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE) / COUNT({col})"
-
-
 def revenue_sum(price: str = "l_extendedprice", discount: str = "l_discount") -> Column:
     """Exact SUM(price * (1 - discount)) — the TPC-H revenue measure.
 

@@ -27,8 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _SHINGLE30, _SHINGLE30_SQL
-from .text import tokens
+from .dedup import _SHINGLE30
 
 
 def word_ngrams(text_col: str, n: int = 3) -> F.Column:
@@ -58,12 +57,6 @@ def word_ngrams_sql(text_col: str, n: int = 3) -> str:
         f"for i in range(1, greatest(len({toks}) - {n - 2}, 1))]) "
         f"ELSE [] END"
     )
-
-
-def ngram_hash(gram: str = "g") -> F.Column:
-    """Portable 30-bit hash of an n-gram string (md5-derived, identical
-    in any engine — see operators/dedup._SHINGLE30)."""
-    return F.expr(_SHINGLE30.format(s=gram))
 
 
 def decontaminate(

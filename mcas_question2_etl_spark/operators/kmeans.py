@@ -86,20 +86,6 @@ def assign_to_centroids(points: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_centroids(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The trained codebook alone: ``(cid, cv)`` after ``iters`` Lloyd
-    rounds from the deterministic seed. The product-quantization path
-    (operators/pq.py) trains one of these per subspace."""
-    pts = emb.select(F.col(id_col).alias("vid"), quantize(vec_col).alias("v"))
-    return _lloyd(pts, k, iters)
-
-
 def _lloyd(pts: DataFrame, k: int, iters: int) -> DataFrame:
     """``iters`` Lloyd rounds over ``(vid, v)`` Q20 points from the
     deterministic seed (vid < k); returns the final ``(cid, cv)``."""

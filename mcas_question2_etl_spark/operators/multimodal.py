@@ -1357,60 +1357,6 @@ def encode_jpeg(
     return (payload, coeffs) if return_coeffs else payload
 
 
-class _JpegBitReader:
-    def __init__(self, data: bytes, pos: int):
-        self.d = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-        self.marker = None
-
-    def _fill(self) -> None:
-        b = self.d[self.pos]
-        if b == 0xFF:
-            nxt = self.d[self.pos + 1]
-            if nxt == 0x00:
-                self.pos += 2  # stuffed 0xFF data byte
-            elif 0xD0 <= nxt <= 0xD7:  # RSTn consumed by caller
-                self.marker = nxt
-                raise StopIteration
-            else:
-                self.marker = nxt  # EOI / next segment: bitstream over
-                raise StopIteration
-        else:
-            self.pos += 1
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
-
-    def bits(self, n: int) -> int:
-        while self.nbits < n:
-            self._fill()
-        v = (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        self.nbits -= n
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def huff(self, table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.bits(1)
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG huffman code")
-
-    def sync_restart(self) -> None:
-        """Consume an RSTn marker and realign to a byte boundary."""
-        self.acc = 0
-        self.nbits = 0
-        while self.d[self.pos] != 0xFF or not (
-            0xD0 <= self.d[self.pos + 1] <= 0xD7
-        ):
-            self.pos += 1
-        self.pos += 2
-        self.marker = None
-
-
 _DHT_MEMO: dict = {}
 
 

@@ -517,43 +517,6 @@ def capture_recapture(
     )
 
 
-def capture_recapture_sql(
-    table: str,
-    key_col: str,
-    mark_a_expr: str,
-    mark_b_expr: str,
-    round_to: int = 2,
-) -> str:
-    """DuckDB twin of :func:`capture_recapture`."""
-    return f"""
-    WITH marks AS (
-      SELECT {key_col} AS k,
-             MAX(CAST(({mark_a_expr}) AS INTEGER)) AS a,
-             MAX(CAST(({mark_b_expr}) AS INTEGER)) AS b
-      FROM {table} GROUP BY {key_col}
-    ),
-    agg AS (
-      SELECT CAST(SUM(a) AS BIGINT) AS n1,
-             CAST(SUM(b) AS BIGINT) AS n2,
-             CAST(SUM(a * b) AS BIGINT) AS m_both
-      FROM marks
-    )
-    SELECT n1, n2, m_both,
-           ROUND((CAST(n1 AS DOUBLE) + 1.0) * (CAST(n2 AS DOUBLE) + 1.0)
-                 / (CAST(m_both AS DOUBLE) + 1.0) - 1.0,
-                 {round_to}) AS n_hat,
-           ROUND(SQRT((CAST(n1 AS DOUBLE) + 1.0)
-                      * (CAST(n2 AS DOUBLE) + 1.0)
-                      * (CAST(n1 AS DOUBLE) - m_both)
-                      * (CAST(n2 AS DOUBLE) - m_both)
-                      / ((CAST(m_both AS DOUBLE) + 1.0)
-                         * (CAST(m_both AS DOUBLE) + 1.0)
-                         * (CAST(m_both AS DOUBLE) + 2.0))),
-                 {round_to}) AS se
-    FROM agg
-    """
-
-
 def chao1_richness(
     df: DataFrame,
     key_col: str,
@@ -595,33 +558,6 @@ def chao1_richness(
     return fof.select(
         "s_obs", "f1", "f2", F.round(chao1, round_to).alias("chao1")
     )
-
-
-def chao1_richness_sql(
-    table: str,
-    key_expr: str,
-    round_to: int = 2,
-) -> str:
-    """DuckDB twin of :func:`chao1_richness`; ``key_expr`` may be an
-    expression (e.g. an unnested token)."""
-    return f"""
-    WITH counts AS (
-      SELECT {key_expr} AS k, CAST(COUNT(*) AS BIGINT) AS c
-      FROM {table} GROUP BY 1
-    ),
-    fof AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS s_obs,
-             CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-             CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2
-      FROM counts
-    )
-    SELECT s_obs, f1, f2,
-           ROUND(CAST(s_obs AS DOUBLE)
-                 + CAST(f1 AS DOUBLE) * (CAST(f1 AS DOUBLE) - 1.0)
-                   / (2.0 * (CAST(f2 AS DOUBLE) + 1.0)),
-                 {round_to}) AS chao1
-    FROM fof
-    """
 
 
 # ──────────────────────────────────────────────────────────────────────────

@@ -39,12 +39,6 @@ def row_value_hash(cols: Sequence[str]) -> F.Column:
     return F.md5(F.concat_ws("|", *parts))
 
 
-def row_value_hash_sql(cols: Sequence[str]) -> str:
-    """DuckDB twin of :func:`row_value_hash`."""
-    joined = ", ".join(f"COALESCE(CAST({c} AS VARCHAR), chr(0))" for c in cols)
-    return f"md5(concat_ws('|', {joined}))"
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,

@@ -47,9 +47,9 @@ _ALL: list[QuerySpec] = [
 # entries), while the local pytest mirror always checks every spec. To
 # accrue driver-green rows for the whole suite across rounds, the list
 # is ordered from the driver's own verdict files: every spec whose
-# LATEST CORRECTNESS_r*.json row is missing or not fully green
-# (rows+schema+hash) comes first in declaration order, then the
-# always-recheck set, then the already-green rest. Each round the
+# LATEST CORRECTNESS_r*.json row is not fully green (rows+schema+hash)
+# comes first in declaration order, graded-red before never-graded,
+# then the always-recheck set, then the already-green rest. Each round the
 # graded prefix therefore rotates onto exactly the specs that still
 # need a row — no per-round hand-editing.
 
@@ -84,34 +84,6 @@ def _driver_status(root: str | None = None) -> dict[str, bool]:
     return status
 
 
-#: r1-registered specs the round-1 window missed entirely (VERDICT.md
-#: "What's missing" #1) — graded BEFORE newer waves until their row is
-#: green; the tier is a no-op once they are (they fall back into the
-#: green tail). Static by necessity: the verdict files record status,
-#: not registration age.
-_R1_UNROWED: tuple[str, ...] = (
-    "tpch_q2_min_cost_supplier", "tpch_q3_shipping_priority",
-    "tpch_q4_priority_check", "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue", "tpch_q7_nation_volume",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "tpch_q10_returned_items", "tpch_q11_important_stock",
-    "tpch_q12_late_shipment_priority", "tpch_q13_customer_distribution",
-    "tpch_q14_promo_revenue", "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_counts", "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume_customer", "tpch_q19_disjunctive_revenue",
-    "tpch_q20_excess_suppliers", "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity", "correlated_above_customer_avg",
-    "group_percentiles", "range_band_join", "sessionize_events",
-    "skew_salted_agg", "skew_salted_join", "events_sliding_window",
-    "events_session_window_batch", "asof_join_forward_next_purchase",
-    "merge_upsert_customers", "changelog_latest_state",
-    "hll_distinct_users_accuracy", "hll_sketch_rollup", "heavy_hitters_users",
-    "approx_percentile_accuracy", "geo_reproject_validity",
-    "glm_tidy_coefficients", "multimodal_feature_extract",
-    "multimodal_frame_sample",
-)
-
-
 #: green specs worth re-grading every round anyway (regression canary
 #: for the flagship parity query; entry() also smokes it each round).
 _ALWAYS_RECHECK: tuple[str, ...] = ("flagship_school_analysis",)
@@ -121,14 +93,8 @@ def _round_order(all_specs: list[QuerySpec]) -> list[QuerySpec]:
     green = _driver_status()
     not_green = [s for s in all_specs if not green.get(s.name, False)]
     graded_red = [s for s in not_green if s.name in green]
-    r1_gap = [
-        s
-        for s in not_green
-        if s.name in _R1_UNROWED and s.name not in green
-    ]
-    tier_names = {s.name for s in graded_red} | {s.name for s in r1_gap}
-    never = [s for s in not_green if s.name not in tier_names]
-    front = graded_red + r1_gap + never
+    never = [s for s in not_green if s.name not in green]
+    front = graded_red + never
     seen = {s.name for s in front}
     recheck = [
         s

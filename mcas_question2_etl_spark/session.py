@@ -17,27 +17,22 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "mcas-question2-etl-spark",
-    cpus: str | None = None,
-    shuffle_partitions: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism; shuffle partitions
-    default to the same number so a local run has one post-shuffle
+    are set to the same number so a local run has one post-shuffle
     partition per core (cluster deployments should size this to
-    data volume / target partition size instead — see bench.py).
+    data volume / target partition size instead).
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_partitions = shuffle_partitions or os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus
-    )
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle_partitions)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalesces post-shuffle partitions by BYTES, but several of
@@ -51,11 +46,7 @@ def get_spark(
         # cannot see per-row cost. A 64 KB floor keeps byte-small
         # CPU-dense stages parallel while leaving real data volumes
         # untouched (any partition over a few MB is unaffected).
-        # Parameterized for deployments that prefer the byte model.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")

@@ -73,9 +73,9 @@ def test_entry_smoke(spark):
 
 
 def test_round_order_rotation(tmp_path):
-    """Window rotation: graded-red first, then the r1 gap list, then
-    never-graded in declaration order, with already-green specs last;
-    a later round's verdict overrides an earlier one."""
+    """Window rotation: graded-red first, then never-graded in
+    declaration order, with already-green specs last; a later round's
+    verdict overrides an earlier one."""
     import json
 
     from mcas_question2_etl_spark.plans import suite as S
@@ -106,9 +106,3 @@ def test_round_order_rotation(tmp_path):
         assert names.index(n) < min(
             names.index(g) for g, ok in green.items() if ok
         )
-    # every r1-gap spec that is still row-less sits inside the first
-    # len(graded_red) + len(gap) slots
-    gap = [n for n in S._R1_UNROWED if n not in green]
-    cutoff = len(graded_red) + len(gap)
-    for n in gap:
-        assert names.index(n) < cutoff

@@ -66,3 +66,17 @@ def test_guard_is_wired_into_assembly():
     next to it) — re-running the assembly path on the live list must
     pass, and the guard must be the identity on it."""
     assert _assert_unique_names(_ALL) is _ALL
+
+
+def test_bench_benches_the_whole_registry(monkeypatch):
+    """bench.py derives its query list from the registry: every spec in
+    declaration order, and an isolation name that is not registered
+    raises instead of being dropped."""
+    import bench
+
+    assert bench.bench_names() == [s.name for s in _ALL]
+    assert set(bench.ISOLATE) <= {s.name for s in _ALL}
+
+    monkeypatch.setattr(bench, "ISOLATE", bench.ISOLATE + ("no_such_spec",))
+    with pytest.raises(ValueError, match="no_such_spec"):
+        bench.bench_names()

@@ -6,8 +6,8 @@ query by query, flagging regressions.
 
 The driver wraps bench output in {"n", "rc", "tail", ...}; the raw
 one-line JSON from bench.py is also accepted. Queries present in only
-one file are listed separately (the HEADLINE list is append-only, so
-"only in new" = newly tracked queries, not renames).
+one file are listed separately (bench.py benches the whole registry,
+so queries only in new = specs registered since the old run).
 """
 
 from __future__ import annotations

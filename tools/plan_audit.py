@@ -1,5 +1,5 @@
 """Physical-plan audit: renders PLANS.md from the live Catalyst plans
-of every bench headline query.
+of every registered spec.
 
 For each query we record what matters at 100 TB — whether predicates
 reached the parquet scan (PushedFilters), whether column pruning
@@ -47,18 +47,15 @@ def audit(plan: str) -> dict:
 
 
 def main() -> None:
-    from bench import HEADLINE
-
-    from mcas_question2_etl_spark.plans.suite import SPECS
+    from mcas_question2_etl_spark.plans.suite import _ALL
     from mcas_question2_etl_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = {s.name: s for s in SPECS}
 
     lines = [
-        "# PLANS — physical-plan audit of the bench headline queries",
+        "# PLANS — physical-plan audit of the registered specs",
         "",
         f"Generated by `tools/plan_audit.py` against `{sf_dir}`. Numbers are",
         "UNIQUE node counts in the final (AQE) physical plan — a persisted",
@@ -72,15 +69,15 @@ def main() -> None:
         "| query | shuffles | broadcasts | BHJ | SMJ | top-k | python | pushed filters | read schema |",
         "|---|---|---|---|---|---|---|---|---|",
     ]
-    for name in HEADLINE:
-        df = specs[name].fn(spark, sf_dir)
+    for spec in _ALL:
+        df = spec.fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()  # materialize AQE final plan
         plan = df._jdf.queryExecution().executedPlan().toString()
         a = audit(plan)
         pushed = "; ".join(p for p in a["pushed"] if p)[:80] or "—"
         schema = (a["schemas"][0][:60] + "…") if a["schemas"] else "—"
         lines.append(
-            f"| {name} | {a['shuffles']} | {a['broadcasts']} | {a['bhj']} "
+            f"| {spec.name} | {a['shuffles']} | {a['broadcasts']} | {a['bhj']} "
             f"| {a['smj']} | {'✓' if a['takeordered'] else '—'} | {a['python']} "
             f"| `{pushed}` | `{schema}` |"
         )
