@@ -10,15 +10,25 @@ Scale design:
   * n-gram Jaccard all-pairs is the *verification* kernel, applied to
     LSH candidate pairs; the all-pairs form here is the correctness
     baseline on a bounded sample.
-  * MinHash+LSH (pyspark.ml) is the scale path: shingles -> hashed
-    term vector -> minhash signatures -> banded bucket join via
-    approxSimilarityJoin, so candidate generation is
-    O(n * bands), never O(n^2).
+  * MinHash + banded LSH over an explicit hash family is the scale
+    path, one stage per helper: :func:`char_ngrams` shingles ->
+    :func:`minhash_signature_expr` -> :func:`lsh_bands` (band_idx,
+    band_key) rows -> :func:`cap_buckets` (the ``MH_MAX_BUCKET``
+    degenerate-bucket guard) -> :func:`bucket_pairs` (the bucket join)
+    -> :func:`verify_candidate_pairs` (exact :func:`jaccard`).
+    Candidate generation is O(n * bands), never O(n^2). Each stage has
+    a ``*_sql`` DuckDB twin next to it, so the oracles replay the same
+    pipeline (:func:`verified_lsh_edges_sql`).
+  * the pyspark.ml MinHashLSH family runs through the same band, cap,
+    join and verify helpers (:func:`minhash_ml_banded_pairs`);
+    ``approxSimilarityJoin`` stays only as the sampled contract check
+    (:func:`minhash_neardup_pairs`), because its OR-amplified tables
+    degenerate to near-all-pairs on a low-vocabulary corpus.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -122,6 +132,40 @@ def char_ngrams(col: Column | str, n: int = 3) -> Column:
     return F.expr(expr)
 
 
+def char_ngrams_sql(col: str, n: int = 3) -> str:
+    """DuckDB twin of :func:`char_ngrams` (empty list below ``n``
+    characters)."""
+    return (
+        f"list_distinct([substring({col}, CAST(i AS INTEGER), {n}) "
+        f"for i in range(1, greatest(length({col}) - {n - 2}, 1))])"
+    )
+
+
+def shingle_overlap(a: str, b: str) -> Column:
+    """|A∩B| of two distinct-shingle array columns."""
+    return F.size(F.array_intersect(a, b))
+
+
+def shingle_overlap_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`shingle_overlap`."""
+    return f"len(list_intersect({a}, {b}))"
+
+
+def jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard |A∩B| / (|A|+|B|-|A∩B|) of two distinct-shingle
+    array columns — integer set sizes, so the one division is
+    bit-reproducible across engines."""
+    inter = shingle_overlap(a, b)
+    union = F.size(a) + F.size(b) - inter
+    return inter.cast("double") / union
+
+
+def jaccard_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`jaccard`."""
+    inter = shingle_overlap_sql(a, b)
+    return f"CAST({inter} AS DOUBLE) / (len({a}) + len({b}) - {inter})"
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -133,8 +177,6 @@ def ngram_jaccard_pairs(
     O(n^2) by construction — the exact-verification kernel. At scale,
     generate candidates with MinHash/LSH first and apply this only to
     candidate pairs; callers bound the input (sample or bucket).
-    Jaccard = |A∩B| / (|A|+|B|-|A∩B|) — integer set sizes, so the
-    division is bit-reproducible across engines.
     """
     shingled = df.select(
         F.col(id_col), F.col(text_col), char_ngrams(text_col, n).alias("__sh")
@@ -145,16 +187,10 @@ def ngram_jaccard_pairs(
     b = shingled.select(
         F.col(id_col).alias("b_id"), F.col("__sh").alias("b_sh")
     )
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    union = F.size("a_sh") + F.size("b_sh") - inter
     return (
         a.crossJoin(b)
         .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
+        .select("a_id", "b_id", jaccard("a_sh", "b_sh").alias("jaccard"))
     )
 
 
@@ -242,45 +278,43 @@ def minhash_signature_sql(
     return "[" + ", ".join(terms) + "]"
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_bucket: int | None = None,
-    params: list[tuple[int, int]] | None = None,
-    band_rows: int = MH_BAND_ROWS,
+#: degenerate-bucket guard of every banded-LSH join, REQUIRED at scale:
+#: a bucket join is quadratic per bucket, and on a low-diversity corpus
+#: one band key can capture most of the corpus (observed here: 3167 of
+#: 5000 docs in one bucket at sf0.1 -> 11.4M candidate pairs). A
+#: bucket holding more ids than this is dropped entirely — its band key
+#: is driven by corpus-wide common shingles and carries ~no similarity
+#: signal, while genuinely similar pairs still collide in their other
+#: (selective) bands.
+MH_MAX_BUCKET = 100
+
+
+def _n_bands(n_perms: int, band_rows: int) -> int:
+    if n_perms % band_rows:
+        # floor division would silently drop the leftover permutations,
+        # shrinking the banding family (and recall) under the caller's
+        # nose — demand an exact split instead
+        raise ValueError(
+            f"{n_perms} permutations must be divisible by band_rows "
+            f"({band_rows}); leftover permutations would be discarded"
+        )
+    return n_perms // band_rows
+
+
+def lsh_bands(
+    sig: DataFrame,
+    id_col: str,
+    n_perms: int,
+    band_rows: int,
+    at: Callable[[int], Column],
 ) -> DataFrame:
-    """Candidate near-dup pairs via banded LSH over the portable MinHash.
-
-    Pipeline: shingle -> 8-wide signature (narrow, scan-fused) ->
-    explode into 4 (band_idx, band_key) rows -> self-join on the band
-    bucket -> distinct pairs. Candidate generation is O(n * bands)
-    rows through one shuffle on the band key (a fixed-width pair of
-    ints, never the document body); the exact Jaccard verification
-    kernel then runs only on candidates. Unlike the pyspark.ml
-    MinHashLSH variant, the hash family is explicit, so a SQL oracle
-    reproduces the exact candidate set.
-
-    ``max_bucket`` is the degenerate-bucket guard, REQUIRED at scale:
-    a bucket-join is quadratic per bucket, and on a low-diversity
-    corpus one band key can capture most of the corpus (observed here:
-    3167 of 5000 docs in one bucket at sf0.1 -> 11.4M candidate
-    pairs). Buckets larger than the cap are dropped entirely — an
-    oversized bucket means that band's key is driven by corpus-wide
-    common shingles and carries ~no similarity signal, while genuinely
-    similar pairs still collide in their other (selective) bands. The
-    per-bucket count rides the same shuffle the join needs (one window
-    over the band key), so the guard costs no extra exchange.
-    """
-    params = params or MH_PARAMS
-    sig = df.select(
-        F.col(id_col), char_ngrams(text_col, n).alias("__sh")
-    ).filter(F.size("__sh") > 0).select(
-        F.col(id_col), minhash_signature_expr("__sh", params).alias("__sig")
-    )
-    n_bands = len(params) // band_rows
-    bands = sig.select(
+    """(id, band_idx, band_key) rows of a banded signature: ``at(k)``
+    reads signature position ``k``, and band ``i`` keys on positions
+    ``i*band_rows`` .. ``(i+1)*band_rows - 1`` joined with ':'. The
+    band shuffle carries these three fixed-width columns only, never
+    shingles or bodies. Raises unless ``band_rows`` divides
+    ``n_perms``."""
+    return sig.select(
         F.col(id_col),
         F.explode(
             F.array(
@@ -288,25 +322,148 @@ def minhash_lsh_candidates(
                     F.struct(
                         F.lit(i).alias("band_idx"),
                         F.concat_ws(
-                            ":",
-                            *[
-                                F.col("__sig")[i * band_rows + r]
-                                for r in range(band_rows)
-                            ],
+                            ":", *[at(i * band_rows + r) for r in range(band_rows)]
                         ).alias("band_key"),
                     )
-                    for i in range(n_bands)
+                    for i in range(_n_bands(n_perms, band_rows))
                 ]
             )
         ).alias("b"),
     ).select(id_col, "b.band_idx", "b.band_key")
-    if max_bucket is not None:
-        w = Window.partitionBy("band_idx", "band_key")
-        bands = (
-            bands.withColumn("__bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
+
+
+def lsh_bands_sql(sig: str, id_col: str, n_perms: int, band_rows: int) -> str:
+    """DuckDB twin of :func:`lsh_bands` over relation ``sig``, which
+    carries the signature as a (1-based) ``sig`` list column."""
+    key = " || ':' || ".join(
+        f"CAST(sig[{band_rows}*i + {r + 1}] AS VARCHAR)" for r in range(band_rows)
+    )
+    idxs = ", ".join(str(i) for i in range(_n_bands(n_perms, band_rows)))
+    return (
+        f"SELECT {id_col}, i AS band_idx, {key} AS band_key "
+        f"FROM {sig}, unnest([{idxs}]) AS t(i)"
+    )
+
+
+def cap_buckets(bands: DataFrame) -> DataFrame:
+    """Drop the band rows of buckets holding more than
+    ``MH_MAX_BUCKET`` ids. The per-bucket count rides the shuffle the
+    bucket join needs (one window over the band key), so the guard
+    costs no extra exchange."""
+    w = Window.partitionBy("band_idx", "band_key")
+    return (
+        bands.withColumn("__bn", F.count(F.lit(1)).over(w))
+        .filter(F.col("__bn") <= MH_MAX_BUCKET)
+        .drop("__bn")
+    )
+
+
+def cap_buckets_sql(bands: str, id_col: str = "doc_id") -> str:
+    """DuckDB twin of :func:`cap_buckets` over relation ``bands``."""
+    return f"""
+      SELECT {id_col}, band_idx, band_key
+      FROM (SELECT *, COUNT(*) OVER (PARTITION BY band_idx, band_key) AS bn
+            FROM {bands})
+      WHERE bn <= {MH_MAX_BUCKET}"""
+
+
+def bucket_pairs(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    id_col: str = "doc_id",
+    names: tuple[str, str] = ("a_id", "b_id"),
+) -> DataFrame:
+    """Distinct id pairs sharing a (band_idx, band_key) bucket. Alone,
+    ``left`` self-joins and each unordered pair appears once (first id
+    < second); with ``right``, every left id pairs with every right id
+    in its buckets (batch-vs-index)."""
+    lo, hi = names
+    a = left.select(F.col(id_col).alias(lo), "band_idx", "band_key")
+    b = (left if right is None else right).select(
+        F.col(id_col).alias(hi), "band_idx", "band_key"
+    )
+    pairs = a.join(b, ["band_idx", "band_key"])
+    if right is None:
+        pairs = pairs.filter(F.col(lo) < F.col(hi))
+    return pairs.select(lo, hi).distinct()
+
+
+def bucket_pairs_sql(
+    left: str,
+    right: str | None = None,
+    id_col: str = "doc_id",
+    names: tuple[str, str] = ("a_id", "b_id"),
+) -> str:
+    """DuckDB twin of :func:`bucket_pairs` over band relations."""
+    lo, hi = names
+    self_only = f" AND a.{id_col} < b.{id_col}" if right is None else ""
+    return f"""
+      SELECT DISTINCT a.{id_col} AS {lo}, b.{id_col} AS {hi}
+      FROM {left} a JOIN {right or left} b
+        ON a.band_idx = b.band_idx AND a.band_key = b.band_key{self_only}"""
+
+
+def minhash_bands(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    params: list[tuple[int, int]] | None = None,
+    band_rows: int = MH_BAND_ROWS,
+) -> DataFrame:
+    """(id, band_idx, band_key) rows of the portable MinHash banding —
+    the shared banding stage of :func:`minhash_lsh_candidates` (self
+    dedup) and :func:`minhash_lsh_between` (incremental batch-vs-index
+    dedup). At scale this IS the LSH index table you materialize:
+    banding the corpus once and storing these three fixed-width
+    columns is what makes every later batch incremental."""
+    params = params or MH_PARAMS
+    sig = (
+        df.select(F.col(id_col), char_ngrams(text_col, n).alias("__sh"))
+        .filter(F.size("__sh") > 0)
+        .select(F.col(id_col), minhash_signature_expr("__sh", params).alias("__sig"))
+    )
+    return lsh_bands(
+        sig, id_col, len(params), band_rows, lambda k: F.col("__sig")[k]
+    )
+
+
+def minhash_bands_sql(
+    shingled: str,
+    id_col: str = "doc_id",
+    params: list[tuple[int, int]] | None = None,
+    band_rows: int = MH_BAND_ROWS,
+) -> str:
+    """DuckDB twin of :func:`minhash_bands` over relation ``shingled``,
+    which carries the :func:`char_ngrams_sql` set as ``shingles``."""
+    params = params or MH_PARAMS
+    sig = (
+        f"(SELECT {id_col}, {minhash_signature_sql('shingles', params)} AS sig "
+        f"FROM {shingled} WHERE length(shingles) > 0)"
+    )
+    return lsh_bands_sql(sig, id_col, len(params), band_rows)
+
+
+def minhash_lsh_candidates(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    params: list[tuple[int, int]] | None = None,
+    band_rows: int = MH_BAND_ROWS,
+) -> DataFrame:
+    """Candidate near-dup pairs via banded LSH over the portable MinHash.
+
+    Pipeline: shingle -> signature (narrow, scan-fused) ->
+    :func:`minhash_bands` -> :func:`cap_buckets` ->
+    :func:`bucket_pairs`. Candidate generation is O(n * bands) rows
+    through one shuffle on the band key (a fixed-width pair of ints,
+    never the document body); the exact Jaccard verification kernel
+    then runs only on candidates. Unlike the pyspark.ml MinHashLSH
+    variant, the hash family is explicit, so a SQL oracle reproduces
+    the exact candidate set.
+    """
+    bands = cap_buckets(minhash_bands(df, id_col, text_col, n, params, band_rows))
     # both sides of the bucket self-join descend from bands, and bands
     # descends from the md5-per-shingle signature — without
     # materialization the whole hashing stage runs twice (once per
@@ -320,19 +477,163 @@ def minhash_lsh_candidates(
     # allocation — a lost block fails the job instead of recomputing.
     # On a production cluster with dynamic allocation, swap for
     # persist(StorageLevel.DISK_ONLY) or reliable checkpoint().
-    bands = bands.localCheckpoint(eager=False)
-    a = bands.select(
-        F.col(id_col).alias("a_id"), "band_idx", "band_key"
+    return bucket_pairs(bands.localCheckpoint(eager=False), id_col=id_col)
+
+
+# Above this estimated shingle-store size the broadcast verify form is
+# refused: a broadcast table must fit in every executor (and under
+# Spark's 8 GB broadcast hard cap), while the shuffle form scales with
+# the cluster. The margin is deliberately conservative — Catalyst's
+# estimate predates the char_ngrams blow-up (~n x text).
+_VERIFY_BROADCAST_MAX_BYTES = 256 << 20
+
+
+def verify_candidate_pairs(
+    cands: DataFrame,
+    shingled: DataFrame,
+    id_col: str = "doc_id",
+    shingle_col: str = "shingles",
+    min_jaccard: float | None = 0.6,
+) -> DataFrame:
+    """Exact-Jaccard verification of LSH candidate pairs against the
+    shingle store — the shared verify stage of the near-dup family
+    (verified_lsh_edges and minhash_ml_banded_pairs).
+
+    Two physically different, semantically identical forms, chosen by
+    Catalyst's size estimate for the shingle store:
+
+    * at most ``_VERIFY_BROADCAST_MAX_BYTES`` — both shingle sides of
+      the verify join BROADCAST; candidate pairs never shuffle again
+      and each executor intersects against an in-memory shingle map.
+      Fastest when the shingled corpus fits an executor broadcast (the
+      graded fixtures), impossible at 100 TB.
+    * above it, or with no estimate — the 100-TB path: candidates
+      SHUFFLE against the id-bucketed shingle store (two shuffle-hash
+      joins on ``a_id`` then ``b_id``). The shingle store partitions
+      across the cluster instead of replicating to every executor; the
+      explicit ``shuffle_hash`` hint also pins the strategy so AQE
+      cannot re-broadcast it.
+
+    Output: (a_id, b_id, jaccard), filtered to >= ``min_jaccard``.
+    A pytest asserts shuffle-form edges == broadcast-form edges and
+    that the shuffle plan broadcasts neither shingle side.
+    """
+    size = _plan_size_bytes(shingled)
+    a = shingled.select(
+        F.col(id_col).alias("a_id"), F.col(shingle_col).alias("a_sh")
     )
-    b = bands.select(
-        F.col(id_col).alias("b_id"), "band_idx", "band_key"
+    b = shingled.select(
+        F.col(id_col).alias("b_id"), F.col(shingle_col).alias("b_sh")
     )
-    return (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
+    if size is not None and size <= _VERIFY_BROADCAST_MAX_BYTES:
+        par = cands.sparkSession.sparkContext.defaultParallelism * 2
+        # repartition before the map-side joins so the array_intersect
+        # stage parallelizes (AQE coalesces the tiny pair shuffle to
+        # ~1 partition otherwise)
+        joined = (
+            cands.repartition(par, "a_id", "b_id")
+            .join(F.broadcast(a), "a_id")
+            .join(F.broadcast(b), "b_id")
+        )
+    else:
+        joined = (
+            cands.join(a.hint("shuffle_hash"), "a_id")
+            .join(b.hint("shuffle_hash"), "b_id")
+        )
+    out = joined.select("a_id", "b_id", jaccard("a_sh", "b_sh").alias("jaccard"))
+    if min_jaccard is not None:
+        out = out.filter(F.col("jaccard") >= min_jaccard)
+    return out
+
+
+def verified_lsh_edges(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    min_jaccard: float | None = 0.6,
+) -> DataFrame:
+    """Exact-Jaccard-verified near-dup edge list from banded-LSH
+    candidates — the shared edge stage of the CC dedup family
+    (neardup_cluster_dedup / dedup_keep_longest / corpus_prep_full):
+
+      * the signature scan is spread across the session's parallelism
+        (:func:`fanout.fan_out` — single-split local scans
+        otherwise hash 1M+ shingles on one core);
+      * candidates come from :func:`minhash_lsh_candidates`;
+      * verification runs through :func:`verify_candidate_pairs`.
+
+    Output: (a_id, b_id, jaccard) with jaccard >= ``min_jaccard``.
+    """
+    docs = fan_out(
+        df.filter(F.length(text_col) >= n).select(F.col(id_col), F.col(text_col)),
+        id_col,
     )
+    cands = minhash_lsh_candidates(docs, id_col=id_col, text_col=text_col, n=n)
+    shingled = docs.select(
+        F.col(id_col), char_ngrams(text_col, n).alias("shingles")
+    )
+    return verify_candidate_pairs(
+        cands,
+        shingled,
+        id_col=id_col,
+        shingle_col="shingles",
+        min_jaccard=min_jaccard,
+    )
+
+
+def verified_lsh_edges_sql(
+    table: str = "documents",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    min_jaccard: float | None = 0.6,
+) -> str:
+    """DuckDB twin of :func:`verified_lsh_edges` over relation
+    ``table``: the whole portable pipeline as one SELECT of
+    (a_id, b_id, jaccard)."""
+    body = f"""
+    WITH sh AS (
+      SELECT {id_col}, {char_ngrams_sql(text_col, n)} AS shingles
+      FROM {table} WHERE length({text_col}) >= {n}
+    ),
+    all_bands AS ({minhash_bands_sql("sh", id_col)}),
+    bands AS ({cap_buckets_sql("all_bands", id_col)}),
+    pairs AS ({bucket_pairs_sql("bands", id_col=id_col)})
+    SELECT p.a_id, p.b_id, {jaccard_sql("sa.shingles", "sb.shingles")} AS jaccard
+    FROM pairs p
+    JOIN sh sa ON sa.{id_col} = p.a_id
+    JOIN sh sb ON sb.{id_col} = p.b_id
+    """
+    if min_jaccard is None:
+        return body
+    return f"SELECT * FROM ({body}) WHERE jaccard >= {min_jaccard}"
+
+
+def minhash_lsh_between(
+    batch: DataFrame,
+    corpus: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+) -> DataFrame:
+    """Incremental near-dup candidates: which BATCH documents collide
+    with the existing CORPUS index. Bands both sides and joins
+    batch x corpus on the band bucket — the batch never self-joins and
+    the corpus never re-pairs with itself, so a daily ingest costs
+    O(batch bands + matched buckets), not a corpus re-dedup.
+
+    The degenerate-bucket guard drops band keys whose CORPUS bucket
+    exceeds ``MH_MAX_BUCKET`` (the stored index maintains these
+    counts): an oversized bucket is corpus-common-shingle noise,
+    exactly as in the self-join case. Output: distinct (batch_id,
+    corpus_id).
+    """
+    # spread both signature scans (round 4): local single-split inputs
+    # otherwise hash every shingle on one core
+    cb = cap_buckets(minhash_bands(fan_out(corpus, id_col), id_col, text_col, n))
+    bb = minhash_bands(fan_out(batch, id_col), id_col, text_col, n)
+    return bucket_pairs(bb, cb, id_col, names=("batch_id", "corpus_id"))
 
 
 # --------------------------------------------------------------------------
@@ -354,9 +655,10 @@ def minhash_neardup_pairs(
 
     shingle -> hashed binary term vector (HashingTF) -> MinHashLSH
     signatures -> approxSimilarityJoin (bucketed candidate join +
-    exact Jaccard-distance filter). This is the O(n) candidate
-    generator that replaces the all-pairs kernel at scale; seeded so
-    results are reproducible run-to-run.
+    exact Jaccard-distance filter). OR-amplified single-hash tables:
+    on a low-vocabulary corpus this degenerates toward all pairs, so
+    callers bound the input (see :func:`minhash_ml_banded_pairs` for
+    the banded form); seeded so results are reproducible run-to-run.
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
@@ -391,134 +693,6 @@ def minhash_neardup_pairs(
     )
 
 
-# Above this estimated shingle-store size the broadcast verify form is
-# refused in "auto" mode: a broadcast table must fit in every executor
-# (and under Spark's 8 GB broadcast hard cap), while the shuffle form
-# scales with the cluster. The margin is deliberately conservative —
-# Catalyst's estimate predates the char_ngrams blow-up (~n x text).
-_VERIFY_BROADCAST_MAX_BYTES = 256 << 20
-
-
-def verify_candidate_pairs(
-    cands: DataFrame,
-    shingled: DataFrame,
-    id_col: str = "doc_id",
-    shingle_col: str = "shingles",
-    min_jaccard: float | None = 0.6,
-    verify: str = "auto",
-) -> DataFrame:
-    """Exact-Jaccard verification of LSH candidate pairs against the
-    shingle store — the shared verify stage of the portable near-dup
-    family (verified_lsh_edges and, through it, neardup_cluster_dedup /
-    dedup_keep_longest / corpus_prep_full).
-
-    Two physically different, semantically identical forms:
-
-    * ``verify="broadcast"`` — both shingle sides of the verify join
-      BROADCAST; candidate pairs never shuffle again and each executor
-      intersects against an in-memory shingle map. Fastest when the
-      shingled corpus fits an executor broadcast (the graded
-      fixtures), impossible at 100 TB.
-    * ``verify="shuffle"`` — the 100-TB path: candidates SHUFFLE
-      against the id-bucketed shingle store (two shuffle-hash joins on
-      ``a_id`` then ``b_id``). The shingle store partitions across the
-      cluster instead of replicating to every executor; the explicit
-      ``shuffle_hash`` hint also pins the strategy so AQE cannot
-      re-broadcast it.
-    * ``verify="auto"`` (default) — broadcast while Catalyst's size
-      estimate for the shingle store is under
-      ``_VERIFY_BROADCAST_MAX_BYTES``; shuffle above it or when no
-      estimate is available. Fixtures stay on the fast path, a real
-      corpus flips to the scalable one without a code change.
-
-    Output: (a_id, b_id, jaccard), filtered to >= ``min_jaccard``.
-    A pytest asserts shuffle-form edges == broadcast-form edges and
-    that the shuffle plan broadcasts neither shingle side.
-    """
-    if verify not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"verify_candidate_pairs: unknown mode {verify!r}")
-    if verify == "auto":
-        size = _plan_size_bytes(shingled)
-        verify = (
-            "broadcast"
-            if size is not None and size <= _VERIFY_BROADCAST_MAX_BYTES
-            else "shuffle"
-        )
-    a = shingled.select(
-        F.col(id_col).alias("a_id"), F.col(shingle_col).alias("a_sh")
-    )
-    b = shingled.select(
-        F.col(id_col).alias("b_id"), F.col(shingle_col).alias("b_sh")
-    )
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    union = F.size("a_sh") + F.size("b_sh") - inter
-    if verify == "broadcast":
-        par = cands.sparkSession.sparkContext.defaultParallelism * 2
-        # repartition before the map-side joins so the array_intersect
-        # stage parallelizes (AQE coalesces the tiny pair shuffle to
-        # ~1 partition otherwise)
-        joined = (
-            cands.repartition(par, "a_id", "b_id")
-            .join(F.broadcast(a), "a_id")
-            .join(F.broadcast(b), "b_id")
-        )
-    else:
-        joined = (
-            cands.join(a.hint("shuffle_hash"), "a_id")
-            .join(b.hint("shuffle_hash"), "b_id")
-        )
-    out = joined.select(
-        "a_id", "b_id", (inter.cast("double") / union).alias("jaccard")
-    )
-    if min_jaccard is not None:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out
-
-
-def verified_lsh_edges(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_bucket: int | None = 100,
-    min_jaccard: float | None = 0.6,
-    verify: str = "auto",
-) -> DataFrame:
-    """Exact-Jaccard-verified near-dup edge list from banded-LSH
-    candidates — the shared edge stage of the CC dedup family
-    (neardup_cluster_dedup / dedup_keep_longest / corpus_prep_full):
-
-      * the signature scan is spread across the session's parallelism
-        (:func:`fanout.fan_out` — single-split local scans
-        otherwise hash 1M+ shingles on one core);
-      * verification runs through :func:`verify_candidate_pairs`,
-        which picks the broadcast form (shingle map replicated to
-        executors) below a size threshold and the shuffle form
-        (candidates shuffle-hash-join against the id-bucketed shingle
-        store) above it — the 100-TB path, round 5.
-
-    Output: (a_id, b_id, jaccard) with jaccard >= ``min_jaccard``.
-    """
-    docs = fan_out(
-        df.filter(F.length(text_col) >= n).select(F.col(id_col), F.col(text_col)),
-        id_col,
-    )
-    cands = minhash_lsh_candidates(
-        docs, id_col=id_col, text_col=text_col, n=n, max_bucket=max_bucket
-    )
-    shingled = docs.select(
-        F.col(id_col), char_ngrams(text_col, n).alias("shingles")
-    )
-    return verify_candidate_pairs(
-        cands,
-        shingled,
-        id_col=id_col,
-        shingle_col="shingles",
-        min_jaccard=min_jaccard,
-        verify=verify,
-    )
-
-
 def minhash_ml_banded_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -526,7 +700,6 @@ def minhash_ml_banded_pairs(
     n: int = 3,
     num_hash_tables: int = 8,
     band_rows: int = 2,
-    max_bucket: int | None = 100,
     min_jaccard: float = 0.7,
     num_features: int = 1 << 18,
     seed: int = 42,
@@ -540,32 +713,22 @@ def minhash_ml_banded_pairs(
     low-vocabulary corpus it degenerates to near-all-pairs (measured
     1210 s at sf0.1 vs ~3 s for this function — every doc pair shares
     some min-shingle). Banding AND-combines ``band_rows`` hashes per
-    bucket key, suppressing those collisions the same way the portable
-    family does (dedup.py `minhash_lsh_candidates`), while still using
-    the seeded pyspark.ml `MinHashLSH` hash family:
+    bucket key, suppressing those collisions through the same band,
+    cap, join and verify helpers as the portable family, while still
+    using the seeded pyspark.ml `MinHashLSH` hash family:
 
       shingle -> HashingTF binary vector -> MinHashLSH.transform
-      -> band keys = concat of ``band_rows`` hash values
-      -> bucket self-join (with the ``max_bucket`` degenerate guard)
-      -> exact-Jaccard verify on candidates only.
+      -> :func:`lsh_bands` -> :func:`cap_buckets` -> :func:`bucket_pairs`
+      -> :func:`verify_candidate_pairs` on candidates only.
 
     O(n x bands) candidate rows through one band-key shuffle; the
     verify join touches candidates, never all pairs. Not SQL-portable
     (seeded family) — callers oracle the accuracy contract or use
-    rows-only checks.
+    rows-only checks. ``band_rows`` must divide ``num_hash_tables``.
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
     from pyspark.ml.functions import vector_to_array
 
-    if num_hash_tables % band_rows != 0:
-        # floor division below would silently drop the leftover hash
-        # tables, shrinking the banding family (and recall) under the
-        # caller's nose — demand an exact split instead
-        raise ValueError(
-            "minhash_ml_banded_pairs: num_hash_tables "
-            f"({num_hash_tables}) must be divisible by band_rows "
-            f"({band_rows}); leftover tables would be discarded"
-        )
     # spread the single-split scan first: shingling + HashingTF +
     # the 8-table MinHash transform are the CPU-heavy stages of this
     # operator and otherwise run on ONE core (fan_out no-ops
@@ -588,63 +751,20 @@ def minhash_ml_banded_pairs(
         numHashTables=num_hash_tables, seed=seed,
     )
     model = lsh.fit(feats)
-    hashed = model.transform(feats)
-    n_bands = num_hash_tables // band_rows
-    # the band shuffle carries (id, band_idx, band_key) ONLY — shingle
-    # arrays rejoin after candidate generation, same discipline as
-    # minhash_lsh_candidates (never shuffle bodies on the bucket key)
-    bands = hashed.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                vector_to_array(
-                                    F.col("hashes")[i * band_rows + r]
-                                )[0].cast("bigint")
-                                for r in range(band_rows)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(id_col, "b.band_idx", "b.band_key")
-    if max_bucket is not None:
-        w = Window.partitionBy("band_idx", "band_key")
-        bands = (
-            bands.withColumn("__bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
-    a = bands.select(F.col(id_col).alias("a_id"), "band_idx", "band_key")
-    b = bands.select(F.col(id_col).alias("b_id"), "band_idx", "band_key")
-    cand = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
+    bands = lsh_bands(
+        model.transform(feats),
+        id_col,
+        num_hash_tables,
+        band_rows,
+        lambda k: vector_to_array(F.col("hashes")[k])[0].cast("bigint"),
     )
-    sh = feats.select(F.col(id_col), "shingles")
-    cand = cand.join(
-        sh.select(F.col(id_col).alias("a_id"), F.col("shingles").alias("a_sh")),
-        "a_id",
-    ).join(
-        sh.select(F.col(id_col).alias("b_id"), F.col("shingles").alias("b_sh")),
-        "b_id",
+    return verify_candidate_pairs(
+        bucket_pairs(cap_buckets(bands), id_col=id_col),
+        feats,
+        id_col=id_col,
+        shingle_col="shingles",
+        min_jaccard=min_jaccard,
     )
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    union = F.size("a_sh") + F.size("b_sh") - inter
-    return cand.select(
-        "a_id",
-        "b_id",
-        (inter.cast("double") / union).alias("jaccard"),
-    ).filter(F.col("jaccard") >= min_jaccard)
 
 
 def duplicated_spans(
@@ -841,83 +961,6 @@ def hamming_band_pairs(
         .withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("a_id", "b_id", "hamming")
-    )
-
-
-def minhash_bands(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(id, band_idx, band_key) rows of the portable MinHash banding —
-    the shared banding stage of :func:`minhash_lsh_candidates` (self
-    dedup) and :func:`minhash_lsh_between` (incremental batch-vs-index
-    dedup). At scale this IS the LSH index table you materialize:
-    banding the corpus once and storing these three fixed-width
-    columns is what makes every later batch incremental."""
-    sig = (
-        df.select(F.col(id_col), char_ngrams(text_col, n).alias("__sh"))
-        .filter(F.size("__sh") > 0)
-        .select(F.col(id_col), minhash_signature_expr("__sh").alias("__sig"))
-    )
-    n_bands = len(MH_PARAMS) // MH_BAND_ROWS
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col("__sig")[i * MH_BAND_ROWS + r]
-                                for r in range(MH_BAND_ROWS)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(id_col, "b.band_idx", "b.band_key")
-
-
-def minhash_lsh_between(
-    batch: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_bucket: int = 100,
-) -> DataFrame:
-    """Incremental near-dup candidates: which BATCH documents collide
-    with the existing CORPUS index. Bands both sides and joins
-    batch x corpus on the band bucket — the batch never self-joins and
-    the corpus never re-pairs with itself, so a daily ingest costs
-    O(batch bands + matched buckets), not a corpus re-dedup.
-
-    The degenerate-bucket guard drops band keys whose CORPUS bucket
-    exceeds ``max_bucket`` (the stored index maintains these counts):
-    an oversized bucket is corpus-common-shingle noise, exactly as in
-    the self-join case. Output: distinct (batch_id, corpus_id).
-    """
-    # spread both signature scans (round 4): local single-split inputs
-    # otherwise hash every shingle on one core
-    cb = minhash_bands(fan_out(corpus, id_col), id_col, text_col, n)
-    w = Window.partitionBy("band_idx", "band_key")
-    cb = (
-        cb.withColumn("__bn", F.count(F.lit(1)).over(w))
-        .filter(F.col("__bn") <= max_bucket)
-        .drop("__bn")
-    )
-    bb = minhash_bands(fan_out(batch, id_col), id_col, text_col, n)
-    return (
-        bb.select(F.col(id_col).alias("batch_id"), "band_idx", "band_key")
-        .join(
-            cb.select(F.col(id_col).alias("corpus_id"), "band_idx", "band_key"),
-            ["band_idx", "band_key"],
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
     )
 
 

@@ -83,11 +83,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     degree at O(sqrt(|E|)) — same count, same joins).
 
     The edge list is consumed four times (node/edge counts, the probe
-    side, and the adjacency build), so it is persisted — without it
+    side, and the adjacency build), so it is checkpointed (eagerly:
+    the counts reach the plan through broadcast joins) — without it
     the whole upstream edge derivation (distinct + clique cap +
     self-join) re-executes per consumer.
     """
-    e = edges.select("a", "b").persist()
+    e = edges.select("a", "b").localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("a").alias("n"))
         .unionByName(e.select(F.col("b").alias("n")))
@@ -455,7 +456,9 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     outdeg^2; both aggregates group on node ids. Output:
     (n_nodes_deg2, avg_lcc, transitivity, n_triangles).
     """
-    e = edges.select("a", "b").persist()
+    # consumed by the probe side and the adjacency build, which feeds
+    # broadcast joins: eager, so no broadcast thread materializes it
+    e = edges.select("a", "b").localCheckpoint(eager=True)
     fwd = e.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
     per_edge = (
         e.join(fwd.select(F.col("a"), F.col("nbrs").alias("na")), "a")

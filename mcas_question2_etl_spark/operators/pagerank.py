@@ -42,10 +42,16 @@ def pagerank(edges: DataFrame, iters: int = 2) -> DataFrame:
     every node must survive; isolated nodes never enter the graph).
     """
     # edges and deg are consumed every iteration (plus deg seeds the
-    # ranks): persist both so the upstream edge derivation and the
-    # degree shuffle run once, not once per consumer per round
-    edges = edges.persist()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    # ranks): checkpoint both so the upstream edge derivation and the
+    # degree shuffle run once, not once per consumer per round. Eager,
+    # because both feed broadcast joins (a lazy checkpoint would be
+    # materialized inside racing broadcast threads)
+    edges = edges.localCheckpoint(eager=True)
+    deg = (
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .localCheckpoint(eager=True)
+    )
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(PR_SCALE).cast("bigint").alias("rank")
     )

@@ -55,8 +55,9 @@ def semdedup_keep(
     """
     asg = kmeans_assign(emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     # The assignment feeds three plan branches (both self-join sides +
-    # the verdict join) — persist it so the codebook train and the
-    # final assign run once, not three times. Squared norms are
+    # the verdict join, broadcast at small sizes) — checkpoint it
+    # eagerly so the codebook train and the final assign run once, not
+    # three times, outside any broadcast thread. Squared norms are
     # precomputed per VECTOR here: computing them per PAIR inside the
     # cosine (as cosine_expr does for one-shot use) would triple the
     # array arithmetic on the O(Σ|cluster|²) hot path. Same integers,
@@ -64,7 +65,7 @@ def semdedup_keep(
     asg = (
         asg.select("vid", "v", "cid")
         .withColumn("nsq", sqnorm_expr("v"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
     a, b = asg.alias("a"), asg.alias("b")
     pair_cos = F.expr(

@@ -71,7 +71,9 @@ def prefix_filter_jaccard_join(
         .withColumn(
             "plen", F.col("m") - F.ceil(F.lit(threshold) * F.col("m")) + 1
         )
-        .persist()  # consumed by the prefix explode and BOTH verify legs
+        # consumed by the prefix explode and BOTH verify legs, which
+        # may broadcast it: eager, so no broadcast thread materializes it
+        .localCheckpoint(eager=True)
     )
     prefixes = ranked.select(
         "id", F.explode(F.slice("rs", 1, F.col("plen"))).alias("pr")

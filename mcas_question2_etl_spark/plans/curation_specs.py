@@ -42,10 +42,8 @@ from ..operators.fanout import fan_out
 from ..operators.similarity import cosine_sql, quantize, quantize_sql
 from ..operators import clustering, sampling
 from ..operators.sampling import hash_bucket_sql
-from .data_pipeline import _LSH_PAIRS_SQL
 from ..operators import dedup
 from ..operators.ranking import with_global_row_number
-from .data_pipeline import _SHINGLES_SQL
 from ..operators import aggregates
 from ..operators.upsert import apply_cdc
 from ..operators.similarity import quantize, quantize_sql
@@ -53,17 +51,12 @@ from ..operators.intervals import coalesce_intervals
 from ..operators.multimodal import decode_thumbnails
 from ..operators import bloomjoin, dsir, encoding, sampling, sketches, timeseries
 
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # ──────────────────────────────────────────────────────────────────────────
@@ -1037,8 +1030,7 @@ def mrl_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_spec(
     "dedup_keep_longest",
     f"""
-    WITH RECURSIVE lshp AS ({_LSH_PAIRS_SQL}),
-    edges AS (SELECT a_id, b_id FROM lshp WHERE jaccard >= 0.6),
+    WITH RECURSIVE edges AS ({dedup.verified_lsh_edges_sql(min_jaccard=0.6)}),
     sym AS (SELECT a_id AS src, b_id AS dst FROM edges
             UNION ALL SELECT b_id, a_id FROM edges),
     nodes AS (SELECT doc_id FROM documents),
@@ -1208,36 +1200,17 @@ def late_arrival_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incremental near-dup: batch (doc_id % 10 == 7) vs corpus (the rest)
 # --------------------------------------------------------------------------
 
-_BANDS_SQL = f"""
-      SELECT doc_id, i AS band_idx,
-             CAST(sig[2*i + 1] AS VARCHAR) || ':' || CAST(sig[2*i + 2] AS VARCHAR)
-               AS band_key
-      FROM (
-        SELECT doc_id, {dedup.minhash_signature_sql('shingles')} AS sig
-        FROM (
-          SELECT doc_id, {_SHINGLES_SQL} AS shingles
-          FROM documents WHERE length(text) >= 3 AND ({{side}})
-        ) WHERE length(shingles) > 0
-      ), unnest([0, 1, 2, 3]) AS t(i)
-"""
-
-
 @_spec(
     "neardup_incremental_batch",
     f"""
-    WITH cb_all AS ({_BANDS_SQL.format(side="doc_id % 10 <> 7")}),
-    cb AS (
-      SELECT doc_id, band_idx, band_key
-      FROM (SELECT *, COUNT(*) OVER (PARTITION BY band_idx, band_key) AS bn
-            FROM cb_all)
-      WHERE bn <= 100
+    WITH sh AS (
+      SELECT doc_id, {dedup.char_ngrams_sql("text")} AS shingles
+      FROM documents WHERE length(text) >= 3
     ),
-    bb AS ({_BANDS_SQL.format(side="doc_id % 10 = 7")}),
-    pairs AS (
-      SELECT DISTINCT bb.doc_id AS batch_id, cb.doc_id AS corpus_id
-      FROM bb JOIN cb ON bb.band_idx = cb.band_idx
-                     AND bb.band_key = cb.band_key
-    )
+    cb_all AS ({dedup.minhash_bands_sql("(SELECT * FROM sh WHERE doc_id % 10 <> 7)")}),
+    cb AS ({dedup.cap_buckets_sql("cb_all")}),
+    bb AS ({dedup.minhash_bands_sql("(SELECT * FROM sh WHERE doc_id % 10 = 7)")}),
+    pairs AS ({dedup.bucket_pairs_sql("bb", "cb", names=("batch_id", "corpus_id"))})
     SELECT batch_id,
            CAST(COUNT(*) AS BIGINT) AS n_collisions,
            CAST(SUM(corpus_id) AS BIGINT) AS sum_corpus_ids
@@ -1246,7 +1219,7 @@ _BANDS_SQL = f"""
     "training-data op — INCREMENTAL near-dup "
     "(operators/dedup.py minhash_lsh_between): a new batch bands "
     "against the stored corpus LSH index (minhash_bands — the "
-    "materialized (id, band_idx, band_key) table), so a daily ingest "
+    "materialized LSH band table), so a daily ingest "
     "costs O(batch bands + matched buckets) instead of re-deduping "
     "the corpus; the corpus-side degenerate-bucket guard mirrors the "
     "self-join case. Completes dedup_incremental_batch (exact "
@@ -1256,7 +1229,7 @@ def neardup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") >= 3)
     batch = docs.filter(F.col("doc_id") % 10 == 7)
     corpus = docs.filter(F.col("doc_id") % 10 != 7)
-    pairs = dedup.minhash_lsh_between(batch, corpus, max_bucket=100)
+    pairs = dedup.minhash_lsh_between(batch, corpus)
     return pairs.groupBy("batch_id").agg(
         F.count(F.lit(1)).alias("n_collisions"),
         F.sum("corpus_id").alias("sum_corpus_ids"),
@@ -1441,34 +1414,11 @@ def _design_recall(params, band_rows: int, j: float = 0.9) -> float:
 
 
 def _setting_ctes(label: str, params, band_rows: int) -> str:
-    """Per-setting candidate CTE chain (sig -> bands -> cand -> tp)."""
-    n_bands = len(params) // band_rows
-    idxs = ", ".join(str(i) for i in range(n_bands))
-    key = " || ':' || ".join(
-        f"CAST(sig[{band_rows}*i + {r + 1}] AS VARCHAR)"
-        for r in range(band_rows)
-    )
-    sig = dedup.minhash_signature_sql("shingles", params)
+    """Per-setting candidate CTE chain (bands -> capped -> cand -> tp)."""
     return f"""
-    sig_{label} AS (
-      SELECT doc_id, {sig} AS sig FROM sh WHERE length(shingles) > 0
-    ),
-    allb_{label} AS (
-      SELECT doc_id, i AS band_idx, {key} AS band_key
-      FROM sig_{label}, unnest([{idxs}]) AS t(i)
-    ),
-    bands_{label} AS (
-      SELECT doc_id, band_idx, band_key
-      FROM (SELECT *, COUNT(*) OVER (PARTITION BY band_idx, band_key) AS bn
-            FROM allb_{label})
-      WHERE bn <= 100
-    ),
-    cand_{label} AS (
-      SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-      FROM bands_{label} a JOIN bands_{label} b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
-    ),
+    allb_{label} AS ({dedup.minhash_bands_sql("sh", params=params, band_rows=band_rows)}),
+    bands_{label} AS ({dedup.cap_buckets_sql(f"allb_{label}")}),
+    cand_{label} AS ({dedup.bucket_pairs_sql(f"bands_{label}")}),
     tp_{label} AS (SELECT * FROM cand_{label} INTERSECT SELECT * FROM truth)"""
 
 
@@ -1494,13 +1444,11 @@ _LSH_ORACLE = f"""
       WHERE doc_id % {_SAMPLE_MOD} = 0 AND doc_id < {_SAMPLE_CAP}
         AND length(text) >= 3
     ),
-    sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM sample),
+    sh AS (SELECT doc_id, {dedup.char_ngrams_sql("text")} AS shingles FROM sample),
     truth AS (
       SELECT a.doc_id AS a_id, b.doc_id AS b_id
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(length(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (length(a.shingles) + length(b.shingles)
-               - length(list_intersect(a.shingles, b.shingles))) >= {_J_THRESH}
+      WHERE {dedup.jaccard_sql("a.shingles", "b.shingles")} >= {_J_THRESH}
     ),{",".join(_setting_ctes(lb, p, r) for lb, p, r in _SETTINGS)}
     {" UNION ALL ".join(_setting_row_sql(lb, _design_recall(p, r)) for lb, p, r in _SETTINGS)}
 """
@@ -1531,21 +1479,9 @@ def lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "doc_id",
     )  # the 128-perm signature otherwise hashes every shingle on 1 core
-    sh = sample.select(
-        "doc_id", dedup.char_ngrams("text", 3).alias("shingles")
-    ).localCheckpoint(eager=False)
-    a = sh.select(
-        F.col("doc_id").alias("a_id"), F.col("shingles").alias("a_sh")
-    )
-    b = sh.select(
-        F.col("doc_id").alias("b_id"), F.col("shingles").alias("b_sh")
-    )
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    union = F.size("a_sh") + F.size("b_sh") - inter
     truth = (
-        a.crossJoin(b)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter((inter.cast("double") / union) >= _J_THRESH)
+        dedup.ngram_jaccard_pairs(sample)
+        .filter(F.col("jaccard") >= _J_THRESH)
         .select("a_id", "b_id")
         .localCheckpoint(eager=False)
     )
@@ -1553,7 +1489,7 @@ def lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     for label, params, band_rows in _SETTINGS:
         cand = dedup.minhash_lsh_candidates(
-            sample, max_bucket=100, params=params, band_rows=band_rows
+            sample, params=params, band_rows=band_rows
         ).localCheckpoint(eager=False)
         n_cand = cand.count()
         n_tp = cand.join(truth, ["a_id", "b_id"], "leftsemi").count()

@@ -29,17 +29,12 @@ from ..operators import (
     text,
 )
 from ..operators import expectations as _X
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 _NORM = "md5(regexp_replace(lower(trim(text)), ' +', ' ', 'g'))"
@@ -134,22 +129,15 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", dedup.simhash_expr("text", 16).alias("simhash"))
 
 
-_DUCK_SHINGLES = (
-    "list_distinct([substring(text, i, 3) "
-    "for i in range(1, greatest(len(text) - 1, 1))])"
-)
-
-
 @_spec(
     "ngram_jaccard_neardup",
     f"""
     WITH s AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS sh
+      SELECT doc_id, {dedup.char_ngrams_sql('text')} AS sh
       FROM documents WHERE doc_id % 29 = 0
     )
     SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
+           {dedup.jaccard_sql('a.sh', 'b.sh')} AS jaccard
     FROM s a JOIN s b ON a.doc_id < b.doc_id
     ORDER BY jaccard DESC, a_id, b_id
     LIMIT 20
@@ -169,14 +157,13 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minhash_neardup",
     f"""
     WITH s AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS sh
+      SELECT doc_id, {dedup.char_ngrams_sql('text')} AS sh
       FROM documents WHERE len(text) >= 3 AND doc_id % 3 = 0 AND doc_id < 500
     ),
     true_pairs AS (
       SELECT a.doc_id AS a_id, b.doc_id AS b_id
       FROM s a JOIN s b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-            / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.7
+      WHERE {dedup.jaccard_sql('a.sh', 'b.sh')} >= 0.7
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_true_pairs,
            TRUE AS candidates_subset_of_true,
@@ -238,14 +225,13 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minhash_neardup_full",
     f"""
     WITH s AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS sh
+      SELECT doc_id, {dedup.char_ngrams_sql('text')} AS sh
       FROM documents WHERE len(text) >= 3
     ),
     truth99 AS (
       SELECT a.doc_id AS a_id, b.doc_id AS b_id
       FROM s a JOIN s b ON a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-            / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.99
+      WHERE {dedup.jaccard_sql('a.sh', 'b.sh')} >= 0.99
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_neardup99_pairs,
            CAST(COALESCE(SUM(CAST(a_id AS BIGINT) * 1000003 + b_id), 0)
@@ -275,7 +261,7 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "emitted >= 0.99 subset cannot contain false positives. The 0.99 "
     "cut is the structural one: identical/near-identical docs "
     "collide in every band, so misses can come only from the "
-    "max_bucket degenerate guard (measured: the guard's one high-J "
+    "MH_MAX_BUCKET degenerate guard (measured: the guard's one high-J "
     "casualty at sf0.01 sits at J=0.978; the >= 0.99 stratum is "
     "fully recalled at both gate SFs, deterministically — seeded "
     "hashes over fixed data). Looser strata stay covered by "
@@ -434,63 +420,16 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(emb, query_vec_id=1, k=5, n_centroids=8)
 
 
-_SHINGLES_SQL = (
-    "list_distinct([substring(text, CAST(i AS INTEGER), 3) "
-    "for i in range(1, greatest(length(text) - 1, 1))])"
-)
-
-
-#: the full portable-LSH pair pipeline as one SQL body — the
-#: minhash_lsh_portable oracle verbatim, and the edge generator the
-#: neardup_cluster_dedup oracle builds its graph from.
-_LSH_PAIRS_SQL = f"""
-    WITH sh AS (
-      SELECT doc_id, {_SHINGLES_SQL} AS shingles
-      FROM documents WHERE length(text) >= 3
-    ),
-    sig AS (
-      SELECT doc_id, {dedup.minhash_signature_sql('shingles')} AS sig
-      FROM sh WHERE length(shingles) > 0
-    ),
-    all_bands AS (
-      SELECT doc_id, i AS band_idx,
-             CAST(sig[2*i + 1] AS VARCHAR) || ':' || CAST(sig[2*i + 2] AS VARCHAR)
-               AS band_key
-      FROM sig, unnest([0, 1, 2, 3]) AS t(i)
-    ),
-    bands AS (
-      -- degenerate-bucket guard, mirroring max_bucket=100 Spark-side
-      SELECT doc_id, band_idx, band_key
-      FROM (SELECT *, COUNT(*) OVER (PARTITION BY band_idx, band_key) AS bn
-            FROM all_bands)
-      WHERE bn <= 100
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-      FROM bands a
-      JOIN bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id
-    )
-    SELECT p.a_id, p.b_id,
-           CAST(length(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-             / (length(sa.shingles) + length(sb.shingles)
-                - length(list_intersect(sa.shingles, sb.shingles))) AS jaccard
-    FROM pairs p
-    JOIN sh sa ON sa.doc_id = p.a_id
-    JOIN sh sb ON sb.doc_id = p.b_id
-    """
-
-
 @_spec(
     "minhash_lsh_portable",
-    _LSH_PAIRS_SQL,
+    dedup.verified_lsh_edges_sql(min_jaccard=None),
     "training-data op: MinHash + banded LSH near-dup with an EXPLICIT "
     "affine hash family ((a*x + b) % (2^31-1) over 30-bit md5 shingle "
     "hashes), so the full candidate generation is engine-portable and "
     "oracle-checked — unlike the pyspark.ml variant (minhash_neardup) "
     "whose seeded family is opaque. Candidates then pass through the "
     "exact-Jaccard verification kernel, i.e. the real two-stage scale "
-    "pipeline end-to-end, including the max_bucket=100 degenerate-"
+    "pipeline end-to-end, including the MH_MAX_BUCKET=100 degenerate-"
     "bucket guard every production LSH dedup needs (uncapped, this "
     "corpus's hottest band bucket holds 63%% of all docs and the "
     "bucket-join goes quadratic)",
@@ -498,8 +437,7 @@ _LSH_PAIRS_SQL = f"""
 def minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.verified_lsh_edges(
-        docs, id_col="doc_id", text_col="text", n=3, max_bucket=100,
-        min_jaccard=None,
+        docs, id_col="doc_id", text_col="text", n=3, min_jaccard=None,
     )
 
 
@@ -672,8 +610,7 @@ def _neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         edges = dedup.verified_lsh_edges(
-            docs, id_col="doc_id", text_col="text", n=3, max_bucket=100,
-            min_jaccard=0.6,
+            docs, id_col="doc_id", text_col="text", n=3, min_jaccard=0.6,
         )
         return clustering.connected_components(
             edges, docs.select("doc_id"), id_col="doc_id", src="a_id",
@@ -686,8 +623,7 @@ def _neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_spec(
     "neardup_cluster_dedup",
     f"""
-    WITH RECURSIVE lshp AS ({_LSH_PAIRS_SQL}),
-    edges AS (SELECT a_id, b_id FROM lshp WHERE jaccard >= 0.6),
+    WITH RECURSIVE edges AS ({dedup.verified_lsh_edges_sql(min_jaccard=0.6)}),
     sym AS (SELECT a_id AS src, b_id AS dst FROM edges
             UNION ALL SELECT b_id, a_id FROM edges),
     nodes AS (SELECT doc_id FROM documents),
@@ -858,16 +794,6 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: the portable-LSH pair body re-rooted on the gated `eligible` CTE —
-#: same SQL text as _LSH_PAIRS_SQL with only the source relation swapped
-#: (DuckDB permits a nested WITH inside a CTE body, proven by
-#: neardup_cluster_dedup).
-_LSH_PAIRS_OVER_ELIGIBLE = _LSH_PAIRS_SQL.replace(
-    "FROM documents WHERE length(text) >= 3",
-    "FROM eligible WHERE length(text) >= 3",
-)
-
-
 @_spec(
     "corpus_prep_full",
     f"""
@@ -896,8 +822,7 @@ _LSH_PAIRS_OVER_ELIGIBLE = _LSH_PAIRS_SQL.replace(
       JOIN gq ON gq.doc_id = d.doc_id AND gq.keep
       JOIN dec ON dec.doc_id = d.doc_id AND dec.overlap_frac < 0.5
     ),
-    lshp AS ({_LSH_PAIRS_OVER_ELIGIBLE}),
-    edges AS (SELECT a_id, b_id FROM lshp WHERE jaccard >= 0.6),
+    edges AS ({dedup.verified_lsh_edges_sql("eligible", min_jaccard=0.6)}),
     sym AS (SELECT a_id AS src, b_id AS dst FROM edges
             UNION ALL SELECT b_id, a_id FROM edges),
     reach(node, lbl) AS (
@@ -944,9 +869,10 @@ def corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the gated corpus feeds FIVE downstream branches (LSH candidates,
     # both sides of the verify join, the CC node universe, the final
     # keep join); without materialization each branch re-runs the
-    # gopher + decontamination chain. persist() is exactly what a
+    # gopher + decontamination chain. Materializing is exactly what a
     # production pipeline does between stages (write the filtered
     # corpus once, read it many times) — measured ~2x on this spec.
+    # Eager, because the verify stage broadcasts shingles built from it.
     eligible = (
         docs.select("doc_id", "text", "lang")
         .join(gq.filter("keep").select("doc_id"), "doc_id", "leftsemi")
@@ -955,7 +881,7 @@ def corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "leftsemi",
         )
-        .persist()
+        .localCheckpoint(eager=True)
     )
     # the edge stage (spread scan -> banded LSH candidates -> exact
     # Jaccard verify) is dedup.verified_lsh_edges, which auto-selects
@@ -967,7 +893,6 @@ def corpus_prep_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="doc_id",
         text_col="text",
         n=3,
-        max_bucket=100,
         min_jaccard=0.6,
     )
     comp = clustering.connected_components(

@@ -30,17 +30,12 @@ from ..operators.ranking import with_global_row_number
 from itertools import combinations
 from math import factorial
 
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,17 +28,12 @@ from ..catalog import load_table
 from ..operators import kmeans as _kmeans
 from ..operators import semdedup as _semdedup
 from ..operators.fanout import fan_out
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # --------------------------------------------------------------------------

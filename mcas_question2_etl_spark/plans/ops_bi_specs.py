@@ -28,24 +28,18 @@ import pandas as pd
 from pyspark.sql import types as T
 from ..functions import geo
 from ..operators import aggregates, concentration, dedup, entropy, evaluation
-from .data_pipeline import _LSH_PAIRS_SQL
 from ..operators import attribution, reconcile, text
 from ..operators import privacy, profiling, text, timeseries
 from ..operators import apportion, timeseries
 from ..operators import assoc, profiling, segmentation, spatial, text
 from ..operators import concentration, regression
 
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # ──────────────────────────────────────────────────────────────────────────
@@ -510,11 +504,7 @@ def doc_length_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _NEARDUP_MATRIX_SQL = f"""
-    WITH hits AS (
-      SELECT a_id, b_id FROM (
-        {_LSH_PAIRS_SQL}
-      ) p WHERE jaccard >= 0.5
-    ),
+    WITH hits AS ({dedup.verified_lsh_edges_sql(min_jaccard=0.5)}),
     lab AS (
       SELECT h.a_id, h.b_id,
              least(da.source, db.source) AS source_a,
@@ -544,8 +534,7 @@ def neardup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 4: ride the shared optimized edge stage (spread signature
     # scan, repartitioned candidates, broadcast verify join)
     hits = dedup.verified_lsh_edges(
-        docs, id_col="doc_id", text_col="text", n=3, max_bucket=100,
-        min_jaccard=0.5,
+        docs, id_col="doc_id", text_col="text", n=3, min_jaccard=0.5,
     ).select("a_id", "b_id")
     src = docs.select("doc_id", "source")
     return (

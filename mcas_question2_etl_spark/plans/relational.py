@@ -18,17 +18,12 @@ from ..catalog import load_table
 from ..functions import scalar
 from ..operators import aggregates, reshape, windows
 from ..quality import validate_join
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # ---------------------------------------------------------------------------

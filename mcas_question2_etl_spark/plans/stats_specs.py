@@ -30,7 +30,6 @@ from ..operators import timeseries as _ts
 from ..operators.sampling import hash_bucket, hash_bucket_sql
 from ..operators import dedup
 from ..operators.bootstrap import _uniform_expr, _uniform_sql, _weight_cases
-from .data_pipeline import _SHINGLES_SQL
 from pyspark.sql import DataFrame, SparkSession
 from ..operators.raking import ipf_fit_uniform, ipf_fit_uniform_sql
 from ..operators import aggregates, benford, markov, sampling, timeseries
@@ -42,17 +41,12 @@ from ..operators import attribution, econ, markov, pairwise, timeseries
 from ..operators import chunking, evaluation, timeseries
 from ..operators.ranking import with_global_row_number
 
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # ──────────────────────────────────────────────────────────────────────────
@@ -835,10 +829,10 @@ _C_THRESH_BUCKETS = 10
       SELECT doc_id, text FROM documents
       WHERE doc_id % 5 = 0 AND doc_id < 1000 AND length(text) >= 3
     ),
-    sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM sample),
+    sh AS (SELECT doc_id, {dedup.char_ngrams_sql("text")} AS shingles FROM sample),
     pairs AS (
       SELECT a.doc_id,
-             CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
+             CAST({dedup.shingle_overlap_sql("a.shingles", "b.shingles")} AS DOUBLE)
                / len(a.shingles) AS containment
       FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
     ),
@@ -879,7 +873,7 @@ def containment_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (
-                F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
+                dedup.shingle_overlap("a_sh", "b_sh").cast("double")
                 / F.size("a_sh")
             ).alias("containment"),
         )

@@ -34,17 +34,12 @@ from ..operators import similarity, survival, text, timeseries
 from ..operators import kmeans
 from ..operators.ranking import with_ntile
 
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # ──────────────────────────────────────────────────────────────────────────

@@ -34,17 +34,12 @@ import math
 from ..operators import pq
 from ..operators.ranking import with_global_row_number, with_running_sum
 
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 # ──────────────────────────────────────────────────────────────────────────
@@ -402,7 +397,9 @@ def session_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
         flagged.withColumn("session_id", F.sum("new_session").over(wrun))
         .groupBy("user_id", "session_id")
         .agg(F.min("t_us").alias("s_us"), F.max("t_us").alias("e_us"))
-        .persist()  # consumed by the session count AND both point legs
+        # consumed by the session count AND both point legs, through
+        # broadcast joins: eager, so no broadcast thread materializes it
+        .localCheckpoint(eager=True)
     )
     points = intervals.select(
         "user_id",

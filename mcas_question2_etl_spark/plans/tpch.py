@@ -20,17 +20,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.aggregates import money_sum, oracle_money_sum, oracle_revenue_sum, revenue_sum
-from ..registry import QuerySpec
+from ..registry import QuerySpec, spec_decorator
 
 SPECS: list[QuerySpec] = []
 
 
-def _spec(name: str, oracle: str | None, survey_ref: str):
-    def wrap(fn):
-        SPECS.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
-        return fn
-
-    return wrap
+_spec = spec_decorator(SPECS)
 
 
 _REV = oracle_revenue_sum("l_extendedprice", "l_discount")

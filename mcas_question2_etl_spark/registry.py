@@ -26,6 +26,21 @@ class QuerySpec:
     survey_ref: str  # SURVEY.md §2 inventory ids this spec covers
 
 
+def spec_decorator(specs: list[QuerySpec]):
+    """A plan module's ``@_spec(name, oracle, survey_ref)`` decorator:
+    each decorated plan function is appended to ``specs`` as a
+    :class:`QuerySpec`, in declaration order, and returned unchanged."""
+
+    def spec(name: str, oracle: str | None, survey_ref: str):
+        def wrap(fn: QueryFn) -> QueryFn:
+            specs.append(QuerySpec(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref))
+            return fn
+
+        return wrap
+
+    return spec
+
+
 def _all_specs() -> list[QuerySpec]:
     from .plans import suite
 

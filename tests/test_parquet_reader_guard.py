@@ -1,4 +1,4 @@
-"""Structural guards on ``sources/io.py``.
+"""Structural guards on the package's I/O and materialization helpers.
 
 ``read_parquet`` is the package's only parquet reader. A direct
 ``spark.read[...].parquet(...)`` anywhere else would bring back the
@@ -9,7 +9,12 @@ outside ``sources/io.py`` fails here.
 ``spill`` is the package's only place for intermediate parquet: it
 writes under a directory ``spark.stop()`` removes. A ``tempfile`` path
 elsewhere would outlive the session, so any ``tempfile`` use outside
-``sources/io.py`` fails here."""
+``sources/io.py`` fails here.
+
+``localCheckpoint`` is the package's only in-session materialization.
+A ``persist()``/``cache()`` block stays in the session's cache manager
+until someone unpersists it, and no caller has the scope to, so any
+such call in the package fails here."""
 
 from __future__ import annotations
 
@@ -68,11 +73,23 @@ def _tempfile_uses(source: str) -> list[int]:
     return lines
 
 
-def _offenders(detect) -> list[str]:
+def _cache_calls(source: str) -> list[int]:
+    """Line numbers of ``<x>.persist(...)`` and ``<x>.cache(...)``
+    calls."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "cache")
+    ]
+
+
+def _offenders(detect, exempt: pathlib.Path | None = READER) -> list[str]:
     return [
         f"{path.relative_to(PACKAGE.parent)}:{line}"
         for path in sorted(PACKAGE.rglob("*.py"))
-        if path != READER
+        if path != exempt
         for line in detect(path.read_text())
     ]
 
@@ -124,5 +141,27 @@ def test_spill_is_the_only_temp_parquet():
     offenders = _offenders(_tempfile_uses)
     assert offenders == [], (
         "spill intermediate parquet through sources.io.spill: "
+        + ", ".join(offenders)
+    )
+
+
+@pytest.mark.parametrize(
+    "src, flagged",
+    [
+        ("df.persist()", True),
+        ("df.select('a').persist(StorageLevel.DISK_ONLY)", True),
+        ("df.cache()", True),
+        ("df.localCheckpoint(eager=True)", False),
+        ("spark.catalog.clearCache()", False),
+    ],
+)
+def test_cache_detector(src, flagged):
+    assert bool(_cache_calls(src)) is flagged
+
+
+def test_no_persist_or_cache_in_package():
+    offenders = _offenders(_cache_calls, exempt=None)
+    assert offenders == [], (
+        "materialize through localCheckpoint, not persist/cache: "
         + ", ".join(offenders)
     )

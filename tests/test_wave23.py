@@ -7,27 +7,25 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_lsh_between_agrees_with_self_join_cross_pairs(spark):
+def test_lsh_between_agrees_with_self_join_cross_pairs(spark, monkeypatch):
     """Batch-vs-corpus banding finds exactly the cross-relation subset
-    of the self-join candidates (same family, same guard)."""
+    of the self-join candidates (same family, guard off on both)."""
     from mcas_question2_etl_spark.catalog import load_table
-    from mcas_question2_etl_spark.operators.dedup import (
-        minhash_lsh_between,
-        minhash_lsh_candidates,
-    )
+    from mcas_question2_etl_spark.operators import dedup
     from tests.conftest import SF_SMALL
 
+    monkeypatch.setattr(dedup, "MH_MAX_BUCKET", 10**9)
     docs = load_table(spark, SF_SMALL, "documents").filter(F.length("text") >= 3)
     batch = docs.filter(F.col("doc_id") % 10 == 7)
     corpus = docs.filter(F.col("doc_id") % 10 != 7)
     got = {
         (r.batch_id, r.corpus_id)
-        for r in minhash_lsh_between(batch, corpus, max_bucket=10**9).collect()
+        for r in dedup.minhash_lsh_between(batch, corpus).collect()
     }
-    # self-join over the union with no guard, filtered to cross pairs
+    # self-join over the union with the guard off, filtered to cross pairs
     self_pairs = {
         (r.a_id, r.b_id)
-        for r in minhash_lsh_candidates(docs, max_bucket=None).collect()
+        for r in dedup.minhash_lsh_candidates(docs).collect()
     }
     want = set()
     for a, b in self_pairs:
