@@ -16,6 +16,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -80,6 +81,9 @@ ISOLATE = (
 # session every chunk bounds the drift at ~15s restart cost each
 CHUNK_SIZE = 90
 
+# fresh sessions each shared build is timed in (median and min recorded)
+BUILD_SESSIONS = 3
+
 # the N slowest queries (by warmup timing) get median-of-3 instead of
 # min-of-2: heavy plans are the ones whose numbers the judge compares
 # round-over-round, and median is robust to a single GC pause without
@@ -99,6 +103,47 @@ def bench_names() -> list[str]:
     if unknown:
         raise ValueError(f"ISOLATE names not in the registry: {unknown}")
     return names
+
+
+def time_builds(sf_dir: str) -> dict[str, dict]:
+    """Shared-intermediate build costs, surfaced as visible pseudo-
+    entries (VERDICT r4 #4): the graph family and the CC dedup family
+    each materialize one session-scoped parquet that ~9 dependent specs
+    reuse; per-query timings exclude that build (it lands in warmup), so
+    each build is timed cold in ``BUILD_SESSIONS`` fresh sessions. Per
+    build: the number of sessions it completed in, the median and the
+    floor (min), as the isolated phase records them, and the error
+    string of the last failure, if any."""
+    from mcas_question2_etl_spark.catalog import TABLES, load_table
+    from mcas_question2_etl_spark.plans import data_pipeline, graph_specs
+    from mcas_question2_etl_spark.session import get_spark
+
+    build_fns = {
+        "copurchase_edges_build": graph_specs.copurchase_edges,
+        "neardup_components_build": data_pipeline._neardup_components,
+    }
+    builds: dict[str, dict] = {name: {} for name in build_fns}
+    runs: dict[str, list[float]] = {name: [] for name in build_fns}
+    for _ in range(BUILD_SESSIONS):
+        spark = get_spark(app_name="mcas-q2-bench-builds")
+        for t in TABLES:
+            load_table(spark, sf_dir, t).count()
+        for name, build in build_fns.items():
+            start = time.perf_counter()
+            try:
+                build(spark, sf_dir).count()
+            except Exception as e:
+                builds[name]["error"] = f"{type(e).__name__}: {str(e)[:300]}"
+                continue
+            runs[name].append(time.perf_counter() - start)
+            _session_hygiene(spark)
+        spark.stop()
+    for name, done in runs.items():
+        builds[name]["sessions"] = len(done)
+        if done:
+            builds[name]["median"] = round(statistics.median(done), 3)
+            builds[name]["min"] = round(min(done), 3)
+    return builds
 
 
 def main() -> None:
@@ -179,28 +224,7 @@ def main() -> None:
         }
         spark.stop()
 
-    # shared-intermediate build costs, surfaced as visible pseudo-
-    # entries (VERDICT r4 #4): the graph family and the CC dedup family
-    # each materialize one session-scoped parquet that ~9 dependent
-    # specs reuse; per-query timings above exclude that build (it lands
-    # in warmup), so record it explicitly in its own fresh session.
-    builds: dict[str, float] = {}
-    try:
-        from mcas_question2_etl_spark.plans import data_pipeline, graph_specs
-
-        spark = get_spark(app_name="mcas-q2-bench-builds")
-        for t in TABLES:
-            load_table(spark, sf_dir, t).count()
-        start = time.perf_counter()
-        graph_specs.copurchase_edges(spark, sf_dir).count()
-        builds["copurchase_edges_build"] = round(time.perf_counter() - start, 3)
-        _session_hygiene(spark)
-        start = time.perf_counter()
-        data_pipeline._neardup_components(spark, sf_dir).count()
-        builds["neardup_components_build"] = round(time.perf_counter() - start, 3)
-        spark.stop()
-    except Exception:
-        pass
+    builds = time_builds(sf_dir)
 
     total = round(sum(timings.values()), 3)
     # The driver captures only a bounded stdout tail, so the final JSON
@@ -219,7 +243,8 @@ def main() -> None:
                 # shared-intermediate build stages: paid once per
                 # session, reused by ~9 dependent specs whose per-query
                 # numbers EXCLUDE this cost (see PERF.md); not summed
-                # into the suite total (warmup already absorbs it there)
+                # into the suite total (warmup already absorbs it there);
+                # see time_builds
                 "builds": builds,
                 # isolate-phase heavies: median (the graded number) next
                 # to the idle-JVM floor — the box is bimodal, and a

@@ -165,10 +165,12 @@ def _local_contract(edges: DataFrame) -> DataFrame:
     jumping over numpy index arrays (no per-edge Python loop): labels
     start as each node's own index into the sorted id array (so the
     min index IS the min id), each sweep takes the neighbor min across
-    all edges (``np.minimum.at``) and then halves label-pointer chains
-    (``lbl = lbl[lbl]``), and the loop stops at the fixed point —
+    all edges (one ``np.minimum.reduceat`` over the edge endpoints,
+    which are sorted once per partition) and then halves label-pointer
+    chains (``lbl = lbl[lbl]``), and the loop stops at the fixed point —
     labels are monotone non-increasing, so it terminates. Memory per
-    task is two int64 arrays the size of the partition's edge list.
+    task is a few int64 arrays twice the size of the partition's edge
+    list.
 
     This is the contraction half of the classic two-phase distributed
     CC: it never shuffles (runs wherever the edges already are), and
@@ -185,19 +187,26 @@ def _local_contract(edges: DataFrame) -> DataFrame:
         for pdf in batches:
             chunks_a.append(pdf["src"].to_numpy(dtype="int64", copy=False))
             chunks_b.append(pdf["dst"].to_numpy(dtype="int64", copy=False))
-        if not chunks_a:
+        n = sum(map(len, chunks_a))
+        if not n:
             return
         a = np.concatenate(chunks_a)
         b = np.concatenate(chunks_b)
-        ids = np.unique(np.concatenate([a, b]))
-        ia = np.searchsorted(ids, a)
-        ib = np.searchsorted(ids, b)
+        # sort the 2n edge endpoints once: each node is one run of the
+        # sorted order, and each endpoint knows the node at its other end
+        ends = np.concatenate([a, b])
+        order = np.argsort(ends)
+        srt = ends[order]
+        first = np.r_[True, srt[1:] != srt[:-1]]
+        starts = np.flatnonzero(first)
+        ids = srt[starts]
+        pos = np.empty(2 * n, dtype="int64")
+        pos[order] = np.cumsum(first) - 1  # endpoint -> index into ids
+        nbr = pos[(order + n) % (2 * n)]
         lbl = np.arange(len(ids), dtype="int64")
         while True:
             prev = lbl
-            lbl = lbl.copy()
-            np.minimum.at(lbl, ia, prev[ib])
-            np.minimum.at(lbl, ib, prev[ia])
+            lbl = np.minimum(prev, np.minimum.reduceat(prev[nbr], starts))
             lbl = lbl[lbl]  # pointer jump: halve label chains
             if np.array_equal(lbl, prev):
                 break

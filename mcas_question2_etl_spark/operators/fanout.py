@@ -31,13 +31,19 @@ _SPREAD_PROBE_MAX_BYTES = 1 << 30
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for the optimized plan — a driver-side
-    stats lookup, far cheaper than the plan->RDD conversion it gates."""
+    stats lookup, far cheaper than the plan->RDD conversion it gates.
+
+    ``None`` when Catalyst has no estimate: a plan over an RDD (a
+    ``createDataFrame`` or ``localCheckpoint`` frame) reports the
+    session's ``spark.sql.defaultSizeInBytes`` (Long.MaxValue unless
+    set), which is a placeholder, not a size."""
     try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        unknown = int(conf.defaultSizeInBytes())
     except Exception:  # pragma: no cover — exotic plans / py4j drift
         return None
+    return None if size == unknown else size
 
 
 def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:

@@ -6,6 +6,18 @@ partition coalescing), shuffle partitions sized to parallelism instead of
 the 200 default, Arrow for any pandas interop, dynamic partition overwrite
 to reproduce the reference's delete-partition+append load
 (election_results_etl.py:114-131) without a delete round-trip.
+
+Python workers start from :mod:`worker_daemon`
+(``spark.python.daemon.module``) instead of the stock
+``pyspark.daemon``. The stock daemon imports pyspark from SPARK_HOME's
+source-only ``pyspark.zip`` and each forked worker imports pandas and
+pyarrow again, so every fresh session paid a 1-2 s Python cold start
+inside its first Arrow kernel. The engine's daemon imports the installed,
+byte-compiled pyspark when it is the same release and preloads the Arrow
+stack before forking; the fork loop itself is the stock one. Workers
+import the daemon by name, as they import the package's kernels, so the
+package must be importable from the driver's working directory or
+``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -51,6 +63,7 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "mcas_question2_etl_spark.worker_daemon")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
     )

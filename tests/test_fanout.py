@@ -53,3 +53,18 @@ def test_fan_out_rule(spark, monkeypatch, wide, size, keys, probed, spread):
         assert plan.startswith("'RepartitionByExpression ['o_orderkey]")
     else:
         assert plan.startswith(f"Repartition {par}, true")
+
+
+def test_fan_out_spreads_rdd_backed_input(spark):
+    """A frame over an RDD (``createDataFrame``, ``localCheckpoint``) has
+    no Catalyst estimate: Catalyst reports ``defaultSizeInBytes`` for it,
+    which reads as no estimate, so the probe runs and a 1-partition input
+    is spread."""
+    par = spark.sparkContext.defaultParallelism
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i,) for i in range(20)], 1), "k long"
+    )
+    assert df.rdd.getNumPartitions() == 1
+    assert fanout._plan_size_bytes(df) is None
+    assert fanout._plan_size_bytes(df.localCheckpoint()) is None
+    assert fanout.fan_out(df).rdd.getNumPartitions() == par

@@ -8,8 +8,11 @@ contraction CANNOT finish locally (non-empty rep graph — the path that
 exercises the cross-partition merge and the composition join).
 """
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from mcas_question2_etl_spark.operators import clustering
 from mcas_question2_etl_spark.operators.clustering import (
     _local_contract,
     connected_components,
@@ -63,3 +66,60 @@ def test_local_contract_kernel_min_labels(spark):
     )
     reps = {r.node: r.rep for r in _local_contract(e).collect()}
     assert reps == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7}
+
+
+def _union_find_min(edges):
+    """node -> MIN node id of its component, over ``edges`` alone."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 29), st.integers(0, 29)), min_size=3, max_size=40
+    )
+)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_two_phase_matches_hashmin_on_random_graphs(spark, monkeypatch, edges):
+    """The sorted-endpoint kernel labels each partition's nodes with the
+    partition-local component min, and the two-phase result equals the
+    hash-min core, on random graphs with a duplicate edge and self-loops
+    spread over 3 input partitions. A target of one edge per contraction
+    partition keeps those 3 partitions as they are, so the rep graph
+    carries the cross-partition merges."""
+    graph = edges + [edges[0], (edges[1][0], edges[1][0]), (40, 40)]
+    monkeypatch.setattr(clustering, "_CC_CONTRACT_PARTITION_EDGES", 1)
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(graph, 3), "a_id long, b_id long"
+    )
+    e = df.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    want_local = sorted(
+        kv
+        for part in e.rdd.glom().collect()
+        for kv in _union_find_min([tuple(r) for r in part]).items()
+    )
+    assert sorted(tuple(r) for r in _local_contract(e).collect()) == want_local
+
+    nodes = spark.createDataFrame(
+        [(n,) for n in sorted({n for p in graph for n in p} | {50})], "doc_id long"
+    )
+    got = {r.doc_id: r.cluster_id for r in connected_components(df, nodes).collect()}
+    hm = {
+        r.doc_id: r.cluster_id
+        for r in connected_components_hashmin(df, nodes).collect()
+    }
+    assert got == hm
+    assert got[40] == 40 and got[50] == 50
