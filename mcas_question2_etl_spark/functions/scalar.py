@@ -52,29 +52,9 @@ def expand_directions(col: Column | str) -> Column:
     return c
 
 
-def split_list(col: Column | str, sep: str = ", ") -> Column:
-    """F5 — delimiter split to array (dags/district_gis_etl.py:46)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # F.split takes a regex; escape the literal separator.
-    import re
-
-    return F.split(c, re.escape(sep))
-
-
-def strip_suffix(col: Column | str, pattern: str) -> Column:
-    """F6 — regex suffix removal (query_census_data.Rmd:74)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, pattern, "")
-
-
 def pct(numer: Column, denom: Column, decimals: int = 1) -> Column:
     """F8/F9 — round(numer/denom*100, d) (dashboard/app_data.R:36-37)."""
     return F.round(numer / denom * 100, decimals)
-
-
-def label_format(fmt: str, *cols: Column | str) -> Column:
-    """F12 — sprintf-style label (dashboard/server.R:20-23)."""
-    return F.format_string(fmt, *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 
 def with_zscore(df, col: str, out_col: str):

@@ -35,7 +35,8 @@ def lda_two_feature(
     exact comparison-counting pass (class 1 predicted when
     w·x > c — ties break to class 0, identically in both engines).
     Output (one row): n0, n1, w1, w2, threshold, fisher_j,
-    accuracy."""
+    accuracy; no output is a negative zero (a sign the two engines'
+    ROUNDs do not agree on)."""
     # DECIMAL features keep their type through the moment sums, which
     # are then exact and so independent of partitioning; they become
     # double only after the aggregate. Other features are summed as
@@ -133,10 +134,11 @@ def lda_two_feature(
     return g.select(
         "n0",
         "n1",
-        F.round(F.col("w1d"), round_to).alias("w1"),
-        F.round(F.col("w2d"), round_to).alias("w2"),
-        F.round(F.col("thrd"), round_to).alias("threshold"),
-        F.round(F.col("fjd"), round_to).alias("fisher_j"),
+        # "+ 0.0" turns a rounded -0.0 into 0.0 in both engines
+        (F.round(F.col("w1d"), round_to) + 0.0).alias("w1"),
+        (F.round(F.col("w2d"), round_to) + 0.0).alias("w2"),
+        (F.round(F.col("thrd"), round_to) + 0.0).alias("threshold"),
+        (F.round(F.col("fjd"), round_to) + 0.0).alias("fisher_j"),
         F.round(
             F.col("hits").cast("double") / F.col("n").cast("double"),
             round_to,
@@ -227,10 +229,10 @@ def lda_two_feature_sql(
       FROM pts p CROSS JOIN full_ f
     )
     SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
-           ROUND(w1, {round_to}) AS w1,
-           ROUND(w2, {round_to}) AS w2,
-           ROUND(thr, {round_to}) AS threshold,
-           ROUND(fj, {round_to}) AS fisher_j,
+           ROUND(w1, {round_to}) + 0.0 AS w1,
+           ROUND(w2, {round_to}) + 0.0 AS w2,
+           ROUND(thr, {round_to}) + 0.0 AS threshold,
+           ROUND(fj, {round_to}) + 0.0 AS fisher_j,
            ROUND(CAST(hits AS DOUBLE) / CAST(n AS DOUBLE), {round_to})
              AS accuracy
     FROM g

@@ -57,20 +57,6 @@ def oracle_revenue_sum(price: str, discount: str) -> str:
     )
 
 
-def string_agg_sorted(col: Column | str, sep: str = ", ", distinct: bool = False) -> Column:
-    """A2 — deterministic STRING_AGG.
-
-    Postgres ``STRING_AGG(x, ', ')`` without ORDER BY is
-    order-nondeterministic (dashboard/sql/get_school_analysis_data.sql:12-13);
-    we sort so results are reproducible (SURVEY §7.4 intentional
-    tightening). ``distinct=True`` maps STRING_AGG(DISTINCT ...) to
-    collect_set.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    collected = F.collect_set(c) if distinct else F.collect_list(c)
-    return F.concat_ws(sep, F.array_sort(collected))
-
-
 def frequency_table(df: DataFrame, *cols: str, count_name: str = "n") -> DataFrame:
     """A3/A4 — value counts: ``table(x)`` (create_school_town_lookup.Rmd:45),
     ``summarize(n())`` (run_analysis.Rmd:46-48)."""

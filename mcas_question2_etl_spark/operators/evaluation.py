@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ranking import doubled_midrank, value_ranks
+
 
 def auc_rank_sum(
     df: DataFrame, score: Column, label: Column, round_to: int = 6
@@ -42,23 +44,16 @@ def auc_rank_sum(
     ``pos_s * that`` to R_pos. Output: one row
     (n_pos, n_neg, auc).
     """
-    per_score = (
-        df.select(score.alias("__s"), label.cast("int").alias("__y"))
-        .groupBy("__s")
-        .agg(
-            F.count(F.lit(1)).alias("n_s"),
-            F.sum("__y").alias("pos_s"),
-        )
-    )
-    w = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_score.withColumn(
-        "below_s", F.coalesce(F.sum("n_s").over(w), F.lit(0))
+    ranked = value_ranks(
+        df.select(score.alias("__s"), label.cast("boolean").alias("pos_s")),
+        "__s",
+        "pos_s",
     )
     agg = ranked.agg(
         F.sum("pos_s").cast("long").alias("n_pos"),
-        (F.sum("n_s") - F.sum("pos_s")).cast("long").alias("n_neg"),
+        (F.sum("c") - F.sum("pos_s")).cast("long").alias("n_neg"),
         F.sum(
-            F.col("pos_s") * (F.col("below_s") + (F.col("n_s") + 1) / 2.0)
+            F.col("pos_s") * (F.col("c_below") + (F.col("c") + 1) / 2.0)
         ).alias("r_pos"),
     )
     return agg.select(
@@ -371,9 +366,10 @@ def spearman_corr(
     Pearson's formula over AVERAGE ranks (the tie-correct form, not
     the 6*sum d^2 shortcut, which is wrong under ties).
 
-    Rank-space trick for exactness: the average rank of a tie run
-    [r, r+c-1] is r + (c-1)/2, so DOUBLED average ranks
-    2r + (c - 1) are INTEGERS. Pearson is scale-invariant, so the
+    Rank-space trick for exactness (:func:`.ranking.doubled_midrank`):
+    the average rank of a tie run [r, r+c-1] is r + (c-1)/2, so
+    DOUBLED average ranks 2r + (c - 1) are INTEGERS. Pearson is
+    scale-invariant, so the
     correlation of the doubled ranks equals Spearman's rho, and every
     moment (sums, sums of squares/products of bigints) accumulates
     exactly in DECIMAL(38,0) — order-free across engines. Only the
@@ -385,19 +381,10 @@ def spearman_corr(
     assume groups fit a task (the repo's two-phase global rank is the
     fallback for a single giant group).
     """
-    wa = Window.partitionBy(group_col).orderBy(col_a)
-    wb = Window.partitionBy(group_col).orderBy(col_b)
-    ca = Window.partitionBy(group_col, col_a)
-    cb = Window.partitionBy(group_col, col_b)
-    # doubled average rank = 2*rank() + (tie_count - 1), an exact bigint
     ranked = df.select(
         F.col(group_col),
-        (
-            2 * F.rank().over(wa) + F.count(F.lit(1)).over(ca) - 1
-        ).cast("bigint").alias("__ra"),
-        (
-            2 * F.rank().over(wb) + F.count(F.lit(1)).over(cb) - 1
-        ).cast("bigint").alias("__rb"),
+        doubled_midrank(col_a, group_col).cast("bigint").alias("__ra"),
+        doubled_midrank(col_b, group_col).cast("bigint").alias("__rb"),
     )
     dec = "decimal(38,0)"
     agg = ranked.groupBy(group_col).agg(
@@ -595,11 +582,11 @@ def kruskal_wallis(
     assumption (the k-sample generalization of Mann-Whitney; the
     nonparametric sibling of :func:`anova_f`).
 
-    Rank exactness (same device as :func:`spearman_corr`): pooled
-    ranking happens at the VALUE GRAIN — ``groupBy(value)`` counts,
-    one ordered window over the distinct-value rollup yields each
-    value's DOUBLED average rank ``2*cum_before + cnt + 1``, an exact
-    bigint. Per-group doubled rank sums then accumulate in
+    Rank exactness (:func:`.ranking.value_ranks`): pooled ranking
+    happens at the VALUE GRAIN — ``groupBy(value)`` counts, one
+    ordered window over the distinct-value rollup yields each value's
+    DOUBLED average rank ``2*cum_before + cnt + 1``, an exact bigint.
+    Per-group doubled rank sums then accumulate in
     DECIMAL(38,0) from the (label, value) contingency rollup; only H
     itself runs in double, and it is ROUNDed (default 9 dp) because a
     k-term double sum's addend order differs across engines.
@@ -618,20 +605,13 @@ def kruskal_wallis(
     parametric (run_analysis.Rmd's GLM); this adds the distribution-
     free comparison a corpus QA report needs.
     """
-    vals = df.groupBy(F.col(value_col).alias("__v")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__cnt")
-    )
-    wv = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
+    vals = value_ranks(df.select(F.col(value_col).alias("__v")), "__v")
     # doubled average pooled rank of every row holding value v
     ranked_vals = vals.select(
         "__v",
-        "__cnt",
-        (
-            2 * F.coalesce(F.sum("__cnt").over(wv), F.lit(0))
-            + F.col("__cnt")
-            + 1
-        ).cast("bigint").alias("__dr"),
-        ((F.col("__cnt") * F.col("__cnt") * F.col("__cnt")) - F.col("__cnt"))
+        F.col("c").alias("__cnt"),
+        (2 * F.col("c_below") + F.col("c") + 1).cast("bigint").alias("__dr"),
+        ((F.col("c") * F.col("c") * F.col("c")) - F.col("c"))
         .cast("decimal(38,0)")
         .alias("__tie"),
     )
@@ -1995,10 +1975,10 @@ def mann_whitney_u(
     complement to :func:`welch_ttest` (which assumes normal-ish
     means), and the 2-sample special case of `kruskal_wallis`.
 
-    Rank-space trick for exactness (same as `spearman_corr`): doubled
-    average ranks are INTEGERS — for a value with ``c_prev`` combined
-    observations strictly below it and ``c`` ties, the doubled rank is
-    ``2*c_prev + c + 1``. Ranks are computed on the aggregated
+    Rank-space trick for exactness (:func:`.ranking.value_ranks`):
+    doubled average ranks are INTEGERS — for a value with ``c_prev``
+    combined observations strictly below it and ``c`` ties, the doubled
+    rank is ``2*c_prev + c + 1``. Ranks are computed on the aggregated
     (value -> count) table, never per row, so the rank stage shuffles
     distinct values only; the per-row scan just aggregates counts.
     ``2*U_a = 2*R_a - n_a*(n_a+1)`` stays integer; the tie term
@@ -2010,25 +1990,17 @@ def mann_whitney_u(
     """
     x = F.col(value_col).cast("decimal(18,2)")
     two = df.filter(F.col(group_col).isin([group_a, group_b])).select(
-        F.col(group_col).alias("__g"), x.alias("__x")
+        x.alias("__x"), (F.col(group_col) == group_a).alias("ca")
     )
-    counts = two.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c"),
-        F.sum(F.when(F.col("__g") == group_a, 1).otherwise(0))
-        .cast("bigint")
-        .alias("__ca"),
-    )
-    w = Window.orderBy("__x").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = counts.withColumn(
-        "__cprev", F.coalesce(F.sum("__c").over(w), F.lit(0))
-    ).withColumn("__dr", 2 * F.col("__cprev") + F.col("__c") + 1)
+    ranked = value_ranks(two, "__x", "ca")
+    dr = 2 * F.col("c_below") + F.col("c") + 1
     agg = ranked.agg(
-        F.sum("__ca").alias("n_a"),
-        F.sum(F.col("__c") - F.col("__ca")).alias("n_b"),
-        F.sum(F.col("__ca") * F.col("__dr")).alias("__r2a"),
-        F.sum(
-            F.col("__c") * F.col("__c") * F.col("__c") - F.col("__c")
-        ).alias("__ties"),
+        F.sum("ca").alias("n_a"),
+        F.sum(F.col("c") - F.col("ca")).alias("n_b"),
+        F.sum(F.col("ca") * dr).alias("__r2a"),
+        F.sum(F.col("c") * F.col("c") * F.col("c") - F.col("c")).alias(
+            "__ties"
+        ),
     )
     n_a, n_b = F.col("n_a"), F.col("n_b")
     n = n_a + n_b
@@ -2113,33 +2085,25 @@ def wilcoxon_signed_rank(
 
     ``diff_col`` must be integer-valued (e.g. a difference of counts)
     so |d| ranks aggregate exactly. Doubled average ranks are INTEGERS
-    computed on the |d| -> count table (same trick as
-    `mann_whitney_u`), so 2*W+ and the tie term stay integer all the
-    way to the final z ratio.
+    computed on the |d| -> count table (:func:`.ranking.value_ranks`),
+    so 2*W+ and the tie term stay integer all the way to the final z
+    ratio.
 
     Output (one row): (n_nonzero, w2_plus BIGINT = 2*W+, w_plus,
     z).
     """
     nz = paired.filter(F.col(diff_col) != 0).select(
         F.abs(F.col(diff_col)).cast("bigint").alias("__ad"),
-        (F.col(diff_col) > 0).alias("__pos"),
+        (F.col(diff_col) > 0).alias("cp"),
     )
-    counts = nz.groupBy("__ad").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c"),
-        F.sum(F.when(F.col("__pos"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("__cp"),
-    )
-    w = Window.orderBy("__ad").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = counts.withColumn(
-        "__cprev", F.coalesce(F.sum("__c").over(w), F.lit(0))
-    ).withColumn("__dr", 2 * F.col("__cprev") + F.col("__c") + 1)
+    ranked = value_ranks(nz, "__ad", "cp")
+    dr = 2 * F.col("c_below") + F.col("c") + 1
     agg = ranked.agg(
-        F.sum("__c").alias("n"),
-        F.sum(F.col("__cp") * F.col("__dr")).alias("__w2p"),
-        F.sum(
-            F.col("__c") * F.col("__c") * F.col("__c") - F.col("__c")
-        ).alias("__ties"),
+        F.sum("c").alias("n"),
+        F.sum(F.col("cp") * dr).alias("__w2p"),
+        F.sum(F.col("c") * F.col("c") * F.col("c") - F.col("c")).alias(
+            "__ties"
+        ),
     )
     n = F.col("n")
     mu2 = (n * (n + 1)).cast("double") / 2.0  # 2 * n(n+1)/4
@@ -2197,6 +2161,41 @@ def wilcoxon_signed_rank_sql(
     """
 
 
+def _complete_blocks(
+    df: DataFrame, block_col: str, item_col: str
+) -> DataFrame:
+    """Rows of ``df`` whose block holds as many rows as there are
+    distinct items (a complete-block design), with that item count as
+    column ``k`` — it stays in the plan, so building it runs no job.
+
+    The block sizes come from a window partitioned by block, the
+    partitioning the callers' within-block rank windows reuse. Every
+    complete block holds exactly k rows, so callers read the number of
+    complete blocks from their own aggregate (:func:`_n_blocks`): a
+    separate count broadcast back onto the rows would add a job chain
+    to every test."""
+    kk = df.agg(F.countDistinct(item_col).cast("bigint").alias("k"))
+    return (
+        df.withColumn(
+            "__nb", F.count(F.lit(1)).over(Window.partitionBy(block_col))
+        )
+        .crossJoin(F.broadcast(kk))
+        .filter(F.col("__nb") == F.col("k"))
+        .drop("__nb")
+    )
+
+
+def _n_blocks() -> Column:
+    """Aggregate over groups of :func:`_complete_blocks` rows, each
+    carrying its row count ``__rows`` and ``k``: the number of complete
+    blocks, 0 when there is none."""
+    return (
+        F.coalesce(F.sum("__rows") / F.max("k"), F.lit(0))
+        .cast("bigint")
+        .alias("n_blocks")
+    )
+
+
 def friedman_test(
     df: DataFrame,
     block_col: str,
@@ -2213,9 +2212,8 @@ def friedman_test(
 
     Only COMPLETE blocks (all k treatments present) enter, filtered
     identically in both engines. Doubled within-block average ranks
-    are exact integers: ``dr = 2*rank_min + (ties - 1)`` from the
-    block-partitioned RANK() window plus the per-(block, value) tie
-    count — so rank sums accumulate exactly and only the final Q
+    are exact integers (:func:`.ranking.doubled_midrank` partitioned by
+    block) — so rank sums accumulate exactly and only the final Q
     arithmetic runs in double (sum R_j^2 is exact at .25 grain).
 
     Scale shape: blocks are the window partition key — thousands of
@@ -2223,35 +2221,23 @@ def friedman_test(
 
     Output (one row): (n_blocks, k, q_stat).
     """
-    k_total = df.select(treatment_col).distinct().count()
-    complete = (
-        df.groupBy(block_col)
-        .agg(F.count(F.lit(1)).alias("__nb"))
-        .filter(F.col("__nb") == k_total)
-        .select(block_col)
-    )
-    rows = df.join(complete, block_col)
-    w_rank = Window.partitionBy(block_col).orderBy(value_col)
-    w_tie = Window.partitionBy(block_col, value_col)
-    ranked = rows.select(
+    ranked = _complete_blocks(df, block_col, treatment_col).select(
         F.col(treatment_col).alias("__tr"),
-        (
-            2 * F.rank().over(w_rank)
-            + F.count(F.lit(1)).over(w_tie)
-            - 1
-        ).alias("__dr"),
+        "k",
+        doubled_midrank(value_col, block_col).alias("__dr"),
     )
-    per_tr = ranked.groupBy("__tr").agg(
-        F.sum("__dr").cast("bigint").alias("__r2")
+    per_tr = ranked.groupBy("__tr", "k").agg(
+        F.sum("__dr").cast("bigint").alias("__r2"),
+        F.count(F.lit(1)).alias("__rows"),
     )
     agg = per_tr.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
+        _n_blocks(),
         F.sum(
             F.col("__r2").cast("double") * F.col("__r2") / 4.0
         ).alias("__sumr2"),
     )
-    n_blocks = complete.count()
-    n, k = F.lit(n_blocks).cast("bigint"), F.col("k")
+    n, k = F.col("n_blocks"), F.col("k")
     q = (
         12.0 / (n * k * (k + 1)).cast("double") * F.col("__sumr2")
         - 3.0 * (n * (k + 1)).cast("double")
@@ -3019,7 +3005,7 @@ def anderson_darling_2s(
 
     over distinct pooled values j (l_j ties at j; B_j, M_aj midrank
     cumulative counts). DOUBLED midrank counts are exact integers
-    (same trick as `mann_whitney_u`), and multiplying each term's
+    (:func:`.ranking.value_ranks`), and multiplying each term's
     numerator and denominator by 4 keeps EVERY intermediate an exact
     bigint: ``(N*M2 - n_a*B2)² / (B2*(2N - B2) - N*l_j)`` with
     ``M2 = 2*M_aj``, ``B2 = 2*B_j`` — only the final weighted sum
@@ -3032,37 +3018,22 @@ def anderson_darling_2s(
     """
     v = F.col(value_col).cast("bigint")
     two = df.filter(F.col(group_col).isin([group_a, group_b])).select(
-        F.col(group_col).alias("__g"), v.alias("__v")
+        v.alias("__v"), (F.col(group_col) == group_a).alias("la")
     )
-    counts = two.groupBy("__v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__l"),
-        F.sum(F.when(F.col("__g") == group_a, 1).otherwise(0))
-        .cast("bigint")
-        .alias("__la"),
-    )
-    w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
+    counts = value_ranks(two, "__v", "la")
     pre = counts.select(
-        "__v",
-        "__l",
-        "__la",
-        (F.col("__l") - F.col("__la")).alias("__lb"),
-        F.coalesce(F.sum("__l").over(w), F.lit(0)).alias("__bprev"),
-        F.coalesce(F.sum("__la").over(w), F.lit(0)).alias("__aprev"),
-    ).select(
-        "__v",
-        "__l",
-        "__la",
-        "__lb",
-        (2 * F.col("__bprev") + F.col("__l")).alias("__b2"),
-        (2 * F.col("__aprev") + F.col("__la")).alias("__ma2"),
+        F.col("c").alias("__l"),
+        (2 * F.col("c_below") + F.col("c")).alias("__b2"),
+        (2 * F.col("la_below") + F.col("la")).alias("__ma2"),
         (
-            2 * (F.col("__bprev") - F.col("__aprev"))
-            + F.col("__lb")
+            2 * (F.col("c_below") - F.col("la_below"))
+            + F.col("c")
+            - F.col("la")
         ).alias("__mb2"),
     )
     tot = counts.agg(
-        F.sum("__la").cast("bigint").alias("__na"),
-        F.sum(F.col("__l") - F.col("__la")).cast("bigint").alias("__nb"),
+        F.sum("la").cast("bigint").alias("__na"),
+        F.sum(F.col("c") - F.col("la")).cast("bigint").alias("__nb"),
         F.count(F.lit(1)).cast("bigint").alias("__nv"),
     )
     j = pre.crossJoin(F.broadcast(tot))
@@ -3404,7 +3375,7 @@ def kendalls_w(
 
     with R_j the treatment rank sums and T_i = sum(t³-t) over tie
     groups within block i. DOUBLED within-block average ranks are
-    exact integers (rank-window + tie-count, as in `friedman_test`),
+    exact integers (:func:`.ranking.doubled_midrank`),
     so ``sum (2R_j)² = 4 sum R_j²`` and every T_i stay exact bigints
     — the x4-scaled numerator/denominator identity
     ``W = (12*sum R2_j² - 12 n² k (k+1)²/4*4...)`` reduces to exact
@@ -3412,30 +3383,19 @@ def kendalls_w(
 
     Output (one row): (n_blocks, k, w).
     """
-    k_total = df.select(treatment_col).distinct().count()
-    complete = (
-        df.groupBy(block_col)
-        .agg(F.count(F.lit(1)).alias("__nb"))
-        .filter(F.col("__nb") == k_total)
-        .select(block_col)
-    )
-    rows = df.join(complete, block_col)
-    w_rank = Window.partitionBy(block_col).orderBy(value_col)
-    w_tie = Window.partitionBy(block_col, value_col)
+    rows = _complete_blocks(df, block_col, treatment_col)
     ranked = rows.select(
-        F.col(block_col).alias("__bl"),
         F.col(treatment_col).alias("__tr"),
-        (
-            2 * F.rank().over(w_rank)
-            + F.count(F.lit(1)).over(w_tie)
-            - 1
-        ).alias("__dr"),
+        "k",
+        doubled_midrank(value_col, block_col).alias("__dr"),
     )
-    per_tr = ranked.groupBy("__tr").agg(
-        F.sum("__dr").cast("bigint").alias("__r2")
+    per_tr = ranked.groupBy("__tr", "k").agg(
+        F.sum("__dr").cast("bigint").alias("__r2"),
+        F.count(F.lit(1)).alias("__rows"),
     )
     sums = per_tr.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
+        _n_blocks(),
         F.sum(F.col("__r2") * F.col("__r2")).cast("bigint").alias("__sr22"),
     )
     ties = (
@@ -3447,9 +3407,8 @@ def kendalls_w(
             ).cast("bigint").alias("__tt")
         )
     )
-    n_blocks = complete.count()
     j = sums.crossJoin(F.broadcast(ties))
-    n = F.lit(n_blocks).cast("bigint")
+    n = F.col("n_blocks")
     k = F.col("k")
     # with R2 = 2R: sum R² = sr22/4 -> W = (12*sr22/4 - 3n²k(k+1)²)
     #   / (n²k(k²-1) - n*tt) = (3*sr22 - 3n²k(k+1)²) / denom
@@ -3694,41 +3653,40 @@ def cronbachs_alpha(
 
     Output (one row): (n_blocks, k, sum_item_var, total_var, alpha).
     """
-    k_total = df.select(item_col).distinct().count()
-    complete = (
-        df.groupBy(block_col)
-        .agg(F.count(F.lit(1)).alias("__nb"))
-        .filter(F.col("__nb") == k_total)
-        .select(block_col)
-    )
-    rows = df.join(complete, block_col).select(
+    rows = _complete_blocks(df, block_col, item_col).select(
         F.col(block_col).alias("__b"),
         F.col(item_col).alias("__i"),
         F.col(value_col).cast("bigint").alias("__x"),
+        "k",
     )
-    n_blocks = complete.count()
-    n = F.lit(n_blocks).cast("bigint")
-    per_item = rows.groupBy("__i").agg(
+    per_item = rows.groupBy("__i", "k").agg(
         F.sum("__x").cast("bigint").alias("__s"),
         F.sum(F.col("__x") * F.col("__x")).cast("bigint").alias("__s2"),
+        F.count(F.lit(1)).alias("__rows"),
     )
-    # n*sum(x^2) - sum(x)^2 = n(n-1) * var -> exact integer numerators
-    item_num = per_item.agg(
+    item_sums = per_item.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(
-            n * F.col("__s2") - F.col("__s") * F.col("__s")
-        ).cast("bigint").alias("__iv"),
+        _n_blocks(),
+        F.sum("__s2").alias("__ss2"),
+        F.sum(F.col("__s") * F.col("__s")).alias("__sss"),
     )
     per_block = rows.groupBy("__b").agg(
         F.sum("__x").cast("bigint").alias("__t")
     )
-    tot_num = per_block.agg(
-        (
-            n * F.sum(F.col("__t") * F.col("__t"))
-            - F.sum("__t") * F.sum("__t")
-        ).cast("bigint").alias("__tv")
+    tot_sums = per_block.agg(
+        F.sum(F.col("__t") * F.col("__t")).alias("__tt"),
+        F.sum("__t").alias("__ts"),
     )
-    j = item_num.crossJoin(F.broadcast(tot_num))
+    n = F.col("n_blocks")
+    # n*sum(x^2) - sum(x)^2 = n(n-1) * var -> exact integer numerators
+    j = item_sums.crossJoin(F.broadcast(tot_sums)).select(
+        "n_blocks",
+        "k",
+        (n * F.col("__ss2") - F.col("__sss")).cast("bigint").alias("__iv"),
+        (n * F.col("__tt") - F.col("__ts") * F.col("__ts"))
+        .cast("bigint")
+        .alias("__tv"),
+    )
     k = F.col("k")
     denom = (n * (n - 1)).cast("double")
     alpha = (k.cast("double") / (k - 1).cast("double")) * (
@@ -3934,9 +3892,8 @@ def jonckheere_terpstra(
       ``2·JT = Σ_v Σ_{i<j} o_j(v) · (2·below_i(v) + o_i(v))``
 
     with ``below_i(v)`` the count of group-i observations strictly
-    below v — O(V log V), one range shuffle. The prefix sums use the
-    two-phase distributed scan (range-partition, local window,
-    broadcast partition offsets), never a single-task global window.
+    below v — O(V log V): the k group flags go through
+    :func:`.ranking.value_ranks`, one window over the distinct values.
     The ordinal group codes are collected once (k-sized list, driver-
     side-small by definition of an ordered-alternative test; guarded
     at 64).
@@ -3954,68 +3911,26 @@ def jonckheere_terpstra(
             f"jonckheere_terpstra: {len(groups)} group codes; an ordered-"
             "alternative test wants a small ordinal scale (<= 64)"
         )
-    cells = src.groupBy("__v").agg(
-        *[
-            F.sum((F.col("__g") == gi).cast("long"))
-            .cast("bigint")
-            .alias(f"__o{idx}")
-            for idx, gi in enumerate(groups)
-        ]
+    flags = [f"__o{idx}" for idx in range(len(groups))]
+    cells = value_ranks(
+        src.select(
+            "__v",
+            *[(F.col("__g") == gi).alias(f) for f, gi in zip(flags, groups)],
+        ),
+        "__v",
+        *flags,
     )
-    # two-phase prefix sums for every group column at once: range
-    # shuffle on value, per-partition inclusive window, partition
-    # totals offset via a #partitions-row window, broadcast back
-    parts = cells.repartitionByRange("__v").withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = parts.select(
-        "*",
-        *[
-            F.sum(f"__o{i}").over(w_local).alias(f"__c{i}")
-            for i in range(len(groups))
-        ],
-    )
-    totals = local.groupBy("__pid").agg(
-        *[F.sum(f"__o{i}").alias(f"__t{i}") for i in range(len(groups))]
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid",
-        *[
-            F.coalesce(F.sum(f"__t{i}").over(w_off), F.lit(0)).alias(
-                f"__off{i}"
-            )
-            for i in range(len(groups))
-        ],
-    )
-    cum = local.join(F.broadcast(offsets), "__pid")
-    # below_i = inclusive cum - own count (one row per distinct value)
     contrib = None
-    for jdx in range(len(groups)):
-        for idx in range(jdx):
-            below_i = (
-                F.col(f"__c{idx}") + F.col(f"__off{idx}") - F.col(f"__o{idx}")
-            )
-            term = F.col(f"__o{jdx}") * (2 * below_i + F.col(f"__o{idx}"))
+    for jdx, f_j in enumerate(flags):
+        for f_i in flags[:jdx]:
+            term = F.col(f_j) * (2 * F.col(f"{f_i}_below") + F.col(f_i))
             contrib = term if contrib is None else contrib + term
-    jt2 = cum.agg(
+    jt2 = cells.agg(
         F.coalesce(F.sum(contrib), F.lit(0)).cast("bigint").alias("__jt2")
     )
     sizes = cells.agg(
-        *[
-            F.sum(f"__o{i}").cast("bigint").alias(f"__n{i}")
-            for i in range(len(groups))
-        ]
-    ).select(
-        F.explode(
-            F.array(*[F.col(f"__n{i}") for i in range(len(groups))])
-        ).alias("__ni")
-    ).filter(F.col("__ni") > 0)
+        F.array(*[F.sum(f).cast("bigint") for f in flags]).alias("__ns")
+    ).select(F.explode("__ns").alias("__ni")).filter(F.col("__ni") > 0)
     tot = sizes.agg(
         F.sum("__ni").cast("bigint").alias("__nn"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
@@ -5550,12 +5465,13 @@ def brunner_munzel(
     P(X < Y) + ½P(X = Y) = ½ WITHOUT Mann-Whitney's hidden
     equal-variance-of-ranks assumption — the two-sample test of
     record when the groups' spreads differ (Behrens-Fisher in rank
-    space). Same doubled-rank exactness discipline as mann_whitney_u:
-    for a distinct value with ``c_prev`` combined observations below
-    and ``c`` ties (``ca``/``ca_prev`` within-group), the doubled
-    combined and within mid-ranks are integers, so the per-
-    observation deviation 2d = 2(c_prev − ca_prev) + (c − ca) is an
-    integer CONSTANT across that value's group members — rank
+    space). Same doubled-rank exactness discipline as mann_whitney_u
+    (:func:`.ranking.value_ranks`): for a distinct value with
+    ``c_prev`` combined observations below and ``c`` ties
+    (``ca``/``ca_prev`` within-group), the doubled combined and within
+    mid-ranks are integers, so the per-observation deviation
+    2d = 2(c_prev − ca_prev) + (c − ca) is an integer CONSTANT
+    across that value's group members — rank
     variances come from exact bigint (Σ2d, Σ(2d)²) power sums and the
     closing statistic
 
@@ -5566,26 +5482,15 @@ def brunner_munzel(
     p_hat (= P̂(X<Y)+½P̂(X=Y)), bm_stat."""
     x = F.col(value_col).cast("decimal(18,2)")
     two = df.filter(F.col(group_col).isin([group_a, group_b])).select(
-        F.col(group_col).alias("__g"), x.alias("__x")
+        x.alias("__x"), (F.col(group_col) == group_a).alias("__ca")
     )
-    counts = two.groupBy("__x").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c"),
-        F.sum(F.when(F.col("__g") == group_a, 1).otherwise(0))
-        .cast("bigint")
-        .alias("__ca"),
-    )
-    w = Window.orderBy("__x").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = (
-        counts.withColumn(
-            "__cprev", F.coalesce(F.sum("__c").over(w), F.lit(0))
-        )
-        .withColumn(
-            "__caprev", F.coalesce(F.sum("__ca").over(w), F.lit(0))
-        )
-        .withColumn(
-            "__cbprev", F.col("__cprev") - F.col("__caprev")
-        )
-        .withColumn("__cb", F.col("__c") - F.col("__ca"))
+    ranked = value_ranks(two, "__x", "__ca").select(
+        F.col("c").alias("__c"),
+        "__ca",
+        F.col("c_below").alias("__cprev"),
+        F.col("__ca_below").alias("__caprev"),
+        (F.col("c_below") - F.col("__ca_below")).alias("__cbprev"),
+        (F.col("c") - F.col("__ca")).alias("__cb"),
     )
     # doubled combined mid-rank and doubled within-group deviations
     r2 = 2 * F.col("__cprev") + F.col("__c") + 1
@@ -5720,8 +5625,9 @@ def fligner_killeen(
 
     Group medians are the shared exact interpolated percentile;
     mid-ranks of |x − med_g| come from the aggregated distinct-value
-    table (doubled ranks are integers); Φ⁻¹ is the same Acklam
-    rational both engines already share (gaussian rank correlation).
+    table (:func:`.ranking.value_ranks`; doubled ranks are integers);
+    Φ⁻¹ is the same Acklam rational both engines already share
+    (gaussian rank correlation).
     Output (one row): k, n, fk_stat, df."""
     pts = df.select(
         F.col(group_col).alias("__g"),
@@ -5736,17 +5642,12 @@ def fligner_killeen(
     counts = u.groupBy("__g", "__u").agg(
         F.count(F.lit(1)).cast("bigint").alias("__cgu")
     )
-    per_u = counts.groupBy("__u").agg(
-        F.sum("__cgu").cast("bigint").alias("__c")
+    # the row total rides the rank window's single partition: no job
+    ranked = value_ranks(u, "__u").withColumn(
+        "n", F.sum("c").over(Window.partitionBy())
     )
-    w = Window.orderBy("__u").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_u.withColumn(
-        "__cprev", F.coalesce(F.sum("__c").over(w), F.lit(0))
-    )
-    n_tot = per_u.agg(F.sum("__c").cast("bigint").alias("n"))
     scored = (
-        counts.join(ranked.select("__u", "__c", "__cprev"), "__u")
-        .crossJoin(F.broadcast(n_tot))
+        counts.join(ranked, "__u")
         .select(
             "__g",
             "__cgu",
@@ -5754,7 +5655,7 @@ def fligner_killeen(
             inv_phi(
                 F.lit(0.5)
                 + (
-                    (2.0 * F.col("__cprev") + F.col("__c") + 1).cast(
+                    (2.0 * F.col("c_below") + F.col("c") + 1).cast(
                         "double"
                     )
                     / 2.0
@@ -6521,18 +6422,7 @@ def page_trend_test(
     cell = df.groupBy(
         F.col(block_col).alias("b"), F.col(treat_col).cast("bigint").alias("t")
     ).agg(F.sum(F.col(value_col).cast("decimal(18,2)")).alias("v"))
-    kk = cell.agg(F.countDistinct("t").cast("bigint").alias("k"))
-    full = (
-        cell.groupBy("b")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("nt"),
-            F.collect_list(F.struct("t", "v")).alias("__c"),
-        )
-        .crossJoin(F.broadcast(kk))
-        .filter(F.col("nt") == F.col("k"))
-        .select("b", F.explode("__c").alias("e"), "k")
-        .select("b", F.col("e.t").alias("t"), F.col("e.v").alias("v"), "k")
-    )
+    full = _complete_blocks(cell, "b", "t")
     w = Window.partitionBy("b").orderBy(F.col("v").asc(), F.col("t").asc())
     ranked = full.withColumn("r", F.row_number().over(w).cast("bigint"))
     per_t = ranked.groupBy("t", "k").agg(
@@ -6622,6 +6512,26 @@ def page_trend_test_sql(
 # ──────────────────────────────────────────────────────────────────────────
 
 
+def _ranked_pair(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Distinct-value rollup of a two-sample rank test: per value of
+    ``value_col`` (as double), ``c`` rows, ``m`` of them in the TRUE
+    group of ``group_col``, ``rmin``, the lowest rank of its tie run
+    (the run covers ranks rmin .. rmin+c-1), and ``n``, the row total.
+    ``n`` is a window over the same single partition the rank window
+    left the distinct values in, so it costs no exchange or job."""
+    pts = df.select(
+        F.col(group_col).cast("boolean").alias("m"),
+        F.col(value_col).cast("double").alias("__v"),
+    )
+    return value_ranks(pts, "__v", "m").select(
+        "__v",
+        "c",
+        "m",
+        (F.col("c_below") + 1).alias("rmin"),
+        F.sum("c").over(Window.partitionBy()).alias("n"),
+    )
+
+
 def lepage_test(
     df: DataFrame,
     group_col: str,
@@ -6655,34 +6565,30 @@ def lepage_test(
     ulp drift reaches z_ab at relative ~1e-13, far below the 1e-6
     rounding grain, and neither big sum is itself ROUNDed or emitted.
 
-    One global rank window, one distinct-value rollup, one k-row
-    reduction. Output (one row): (n_x, n_y, w_stat, ab_mean, z_w,
-    z_ab, lepage_d) — w_stat is the exact half-integer mid-rank sum
-    (bit-identical: W2 is an exact bigint), while the Ansari-Bradley
-    side is emitted as the MEAN score ab_mean = AB/n_x (~n/4): the
-    raw sum reaches ~2e10 at sf0.1, past the 2^53/1e6 bound where
-    ROUND(x,6) itself diverges cross-engine (the r8 audit caught
-    exactly this column).
+    One distinct-value rollup (:func:`.ranking.value_ranks`, a tie run
+    covers ranks [below+1, below+c]; its Ansari-Bradley sum is closed
+    form), one k-row reduction. Output (one row): (n_x, n_y, w_stat,
+    ab_mean, z_w, z_ab, lepage_d) — w_stat is the exact half-integer
+    mid-rank sum (bit-identical: W2 is an exact bigint), while the
+    Ansari-Bradley side is emitted as the MEAN score ab_mean = AB/n_x
+    (~n/4): the raw sum reaches ~2e10 at sf0.1, past the 2^53/1e6
+    bound where ROUND(x,6) itself diverges cross-engine (the r8 audit
+    caught exactly this column).
     """
-    pts = df.select(
-        F.col(group_col).cast("boolean").alias("__g"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    w = Window.orderBy(F.col("__v").asc(), F.col("__g").asc())
-    ranked = pts.withColumn("__r", F.row_number().over(w).cast("bigint"))
-    n_row = ranked.agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-    perval = (
-        ranked.crossJoin(F.broadcast(n_row))
-        .groupBy("__v")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.col("__g").cast("bigint")).cast("bigint").alias("m"),
-            F.min("__r").alias("rmin"),
-            F.sum(F.least(F.col("__r"), F.col("__n") + 1 - F.col("__r")))
-            .cast("bigint")
-            .alias("sa"),
-        )
-    )
+    perval = _ranked_pair(df, group_col, value_col)
+
+    def tri(x):
+        return F.shiftright(x * (x + 1), 1)  # x(x+1)/2, exact: x(x+1) is even
+
+    def folded(r):
+        """Σ min(i, n+1-i) over i in [1, r]: the score is i up to
+        h = (n+1)//2, then n+1-i, which runs from n-h down to n+1-r."""
+        n = F.col("n")
+        h = F.shiftright(n + 1, 1)
+        return tri(F.least(r, h)) + tri(n - h) - tri(n - F.greatest(r, h))
+
+    last = F.col("rmin") + F.col("c") - 1
+    perval = perval.withColumn("sa", folded(last) - folded(F.col("rmin") - 1))
     r2 = 2 * F.col("rmin") + F.col("c") - 1  # doubled mid-rank, exact
     # Σc·R2² ~ 4N³ wraps a non-ANSI bigint accumulator past N ~ 1.3e6
     # rows — DECIMAL(38,0) keeps it exact to N ~ 1e12 (r8 hardening;
@@ -6860,21 +6766,11 @@ def cucconi_test(
     are the final closed forms on bit-identical integer inputs,
     identical expression shape in both engines.
 
-    One global rank window, one distinct-value rollup, one k-row
-    reduction — the lepage scale shape. Output (one row):
+    One distinct-value rollup, one k-row reduction — the lepage
+    scale shape. Output (one row):
     (n_x, n_y, u_star, v_star, c_stat).
     """
-    pts = df.select(
-        F.col(group_col).cast("boolean").alias("__g"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    w = Window.orderBy(F.col("__v").asc(), F.col("__g").asc())
-    ranked = pts.withColumn("__r", F.row_number().over(w).cast("bigint"))
-    perval = ranked.groupBy("__v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c"),
-        F.sum(F.col("__g").cast("bigint")).cast("bigint").alias("m"),
-        F.min("__r").alias("rmin"),
-    )
+    perval = _ranked_pair(df, group_col, value_col)
     r2 = 2 * F.col("rmin") + F.col("c") - 1  # doubled mid-rank, exact
     # DECIMAL(38,0) accumulators: Σm·R2² ~ 4N³ wraps bigint past
     # N ~ 1.3e6 rows (r8 hardening, same as lepage/mood)
@@ -7036,30 +6932,14 @@ def mood_scale_test(
     and it is never emitted or ROUNDed. t_stat = T4/4 is emitted
     unrounded: a once-cast exact decimal, bit-identical cross-engine.
 
-    One global rank window, one distinct-value rollup, one k-row
-    reduction. Output (one row): (n_x, n_y, t_stat, z_stat).
+    One distinct-value rollup, one k-row reduction. Output (one
+    row): (n_x, n_y, t_stat, z_stat).
     """
-    pts = df.select(
-        F.col(group_col).cast("boolean").alias("__g"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    w = Window.orderBy(F.col("__v").asc(), F.col("__g").asc())
-    ranked = pts.withColumn("__r", F.row_number().over(w).cast("bigint"))
-    n_row = ranked.agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-    perval = (
-        ranked.crossJoin(F.broadcast(n_row))
-        .groupBy("__v")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-            F.sum(F.col("__g").cast("bigint")).cast("bigint").alias("m"),
-            F.min("__r").alias("rmin"),
-            F.max("__n").alias("n_tot"),
-        )
-    )
-    d = 2 * F.col("rmin") + F.col("c") - 1 - (F.col("n_tot") + 1)
+    perval = _ranked_pair(df, group_col, value_col)
+    d = 2 * F.col("rmin") + F.col("c") - 1 - (F.col("n") + 1)
     s4 = (d * d).cast("decimal(38,0)")
     agg = perval.agg(
-        F.max("n_tot").alias("n"),
+        F.max("n").alias("n"),
         F.sum("m").cast("bigint").alias("nx"),
         F.sum(F.col("m").cast("decimal(38,0)") * s4).alias("__t4"),
         F.sum(F.col("c").cast("decimal(38,0)") * s4).alias("__ss4"),
@@ -7324,7 +7204,8 @@ def quade_test(
       F = (n−1)·B/(A−B),  A = Σ S_ij²,  B = (1/n) Σ_j S_j²
       ~ F(k−1, (n−1)(k−1)).
 
-    Exactness ledger: DOUBLED mid-ranks make 2r_ij − (k+1) and 2Q_i
+    Exactness ledger: DOUBLED mid-ranks
+    (:func:`.ranking.doubled_midrank`) make 2r_ij − (k+1) and 2Q_i
     exact integers, so S4_ij = 2Q_i·(2r_ij−(k+1)) = 4·S_ij is exact;
     S4_j sums are bigints and both quadratic accumulators (A4 = ΣS4²,
     B4 = ΣS4_j²) run as DECIMAL(38,0) (they grow ~n³k², past int64
@@ -7342,46 +7223,16 @@ def quade_test(
     cell = df.groupBy(
         F.col(block_col).alias("b"), F.col(treat_col).cast("bigint").alias("t")
     ).agg(F.sum(F.col(value_col).cast("decimal(18,2)")).alias("v"))
-    kk = cell.agg(F.countDistinct("t").cast("bigint").alias("k"))
-    full = (
-        cell.groupBy("b")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("nt"),
-            F.collect_list(F.struct("t", "v")).alias("__c"),
-        )
-        .crossJoin(F.broadcast(kk))
-        .filter(F.col("nt") == F.col("k"))
-        .select("b", F.explode("__c").alias("e"), "k")
-        .select("b", F.col("e.t").alias("t"), F.col("e.v").alias("v"), "k")
-    )
+    full = _complete_blocks(cell, "b", "t")
     # within-block doubled mid-ranks of v (ties share the mid-rank)
-    wr = Window.partitionBy("b").orderBy(F.col("v").asc())
-    wv = Window.partitionBy("b", "v")
     ranked = full.select(
-        "b",
-        "t",
-        "k",
-        "v",
-        (
-            2 * F.rank().over(wr).cast("bigint")
-            + F.count(F.lit(1)).over(wv).cast("bigint")
-            - 1
-        ).alias("__dr2"),  # doubled mid-rank: 2*minrank + ties - 1
+        "b", "t", "k", doubled_midrank("v", "b").alias("__dr2")
     )
     # block ranges and their across-block doubled mid-ranks
     rng = full.groupBy("b").agg(
         (F.max("v") - F.min("v")).alias("__rng")
     )
-    wq = Window.orderBy(F.col("__rng").asc())
-    wqe = Window.partitionBy("__rng")
-    q = rng.select(
-        "b",
-        (
-            2 * F.rank().over(wq).cast("bigint")
-            + F.count(F.lit(1)).over(wqe).cast("bigint")
-            - 1
-        ).alias("__q2"),
-    )
+    q = rng.select("b", doubled_midrank("__rng").alias("__q2"))
     joined = ranked.join(F.broadcast(q), "b")
     s4 = F.col("__q2") * (F.col("__dr2") - (F.col("k") + 1))
     per_t = joined.groupBy("t").agg(
@@ -7863,36 +7714,25 @@ def auc_delong_ci(
     lab = (
         label_col if not isinstance(label_col, str) else F.col(label_col)
     )
-    per = df.groupBy(s.alias("s")).agg(
-        F.sum(lab.cast("long")).cast("bigint").alias("c1"),
-        F.sum((~lab.cast("boolean")).cast("long"))
-        .cast("bigint")
-        .alias("c0"),
-    )
-    w_below = (
-        Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_above = (
-        Window.orderBy("s").rowsBetween(1, Window.unboundedFollowing)
-    )
-    cum = per.select(
+    pos = lab.cast("boolean")
+    cum = value_ranks(
+        df.select(s.alias("s"), pos.alias("c1"), (~pos).alias("c0")),
         "s",
         "c1",
         "c0",
-        F.coalesce(F.sum("c0").over(w_below), F.lit(0)).alias("b0"),
-        F.coalesce(F.sum("c1").over(w_above), F.lit(0)).alias("a1"),
     )
     tot = cum.agg(
         F.sum("c1").cast("bigint").alias("n1"),
         F.sum("c0").cast("bigint").alias("n0"),
     )
     j = cum.crossJoin(F.broadcast(tot))
+    a1 = F.col("n1") - F.col("c1_below") - F.col("c1")  # positives above
     v10 = (
-        F.col("b0").cast("double")
+        F.col("c0_below").cast("double")
         + 0.5 * F.col("c0").cast("double")
     ) / F.col("n0").cast("double")
     v01 = (
-        F.col("a1").cast("double")
+        a1.cast("double")
         + 0.5 * F.col("c1").cast("double")
     ) / F.col("n1").cast("double")
     agg = j.agg(

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ranking import doubled_midrank
+
 #: 1/sqrt(2*pi)
 _INV_SQRT_2PI = 0.3989422804014327
 
@@ -718,8 +720,9 @@ def hoeffding_d(
     monotone-invariant) with a known null distribution. Ties get the
     classical half-credit φ ∈ {0, ½, 1}.
 
-    Exactness: mid-ranks are stored doubled (R2 = 2R, integers) and
-    the pair credit quadrupled (Q4 = Σ 4·φx·φy, integers), so
+    Exactness: mid-ranks are stored doubled (R2 = 2R, integers, from
+    :func:`.ranking.doubled_midrank`) and the pair credit quadrupled
+    (Q4 = Σ 4·φx·φy, integers), so
     D1·16 = Σ Q4(Q4−4), D2·16 = Σ(R2−2)(R2−4)(S2−2)(S2−4) and
     D3·16 = Σ(R2−4)(S2−4)Q4 are EXACT bigint sums — the whole
     statistic is integer arithmetic until one closing division:
@@ -734,26 +737,12 @@ def hoeffding_d(
         F.col(x).cast("double").alias("__x"),
         F.col(y).cast("double").alias("__y"),
     )
-    n_w = F.count(F.lit(1)).over(Window.partitionBy())
-    # doubled mid-rank: 2R = rank_asc + n - rank_desc + 1 (exact ints)
-    r2 = (
-        F.rank().over(Window.orderBy("__x"))
-        + n_w
-        - F.rank().over(Window.orderBy(F.col("__x").desc()))
-        + 1
-    )
-    s2 = (
-        F.rank().over(Window.orderBy("__y"))
-        + n_w
-        - F.rank().over(Window.orderBy(F.col("__y").desc()))
-        + 1
-    )
     ranked = pts.select(
         F.monotonically_increasing_id().alias("__id"),
         "__x",
         "__y",
-        r2.cast("bigint").alias("__r2"),
-        s2.cast("bigint").alias("__s2"),
+        doubled_midrank("__x").cast("bigint").alias("__r2"),
+        doubled_midrank("__y").cast("bigint").alias("__s2"),
     )
     a = ranked.select(
         F.col("__id").alias("__ia"),

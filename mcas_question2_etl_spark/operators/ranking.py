@@ -23,12 +23,43 @@ partition boundaries.
 ``with_ntile`` derives ntile(k) from (rn, n) in closed form — the first
 ``n % k`` buckets get ``n//k + 1`` rows, matching SQL NTILE exactly —
 so equal-frequency bucketing inherits the same scale-out.
+
+The rank-test family ranks with ties averaged. The average rank of a
+tie run [r, r+t-1] is r + (t-1)/2, so the DOUBLED mid-rank
+``2r + t - 1`` is an exact integer and every rank sum stays an exact
+integer sum. Two helpers produce it:
+
+* ``doubled_midrank`` — per row, from a partitioned ``rank()`` window
+  plus the tie count (for ranks within blocks or groups);
+* ``value_ranks`` — per distinct value: the row count, optional flag
+  counts, and how many rows (and flagged rows) lie strictly below the
+  value. Only the distinct-value table is sorted, in one window, so the
+  per-row input is reduced locally before anything is ordered.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _range_parts(df: DataFrame, order_cols: list, num_partitions) -> DataFrame:
+    """``df`` range-partitioned on ``order_cols`` with its partition id
+    in ``__pid``, materialized once.
+
+    The two-phase scans read ``__pid`` in two branches (local windows
+    and per-partition offsets). Left as a plan, each branch may get its
+    own range exchange, each sampling its own boundaries, and the
+    offsets then land on the wrong rows; the checkpoint fixes one
+    partitioning for both.
+    """
+    return (
+        df.repartitionByRange(
+            *([num_partitions] if num_partitions else []), *order_cols
+        )
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
 
 
 def with_global_row_number(
@@ -40,9 +71,7 @@ def with_global_row_number(
     """Adds ``out_col`` = 1-based position in the total order defined by
     ``order_cols`` (which must be a unique total order), computed with
     per-partition windows only — no single-task global window."""
-    parts = df.repartitionByRange(
-        *([num_partitions] if num_partitions else []), *order_cols
-    ).withColumn("__pid", F.spark_partition_id())
+    parts = _range_parts(df, order_cols, num_partitions)
     w_local = Window.partitionBy("__pid").orderBy(*order_cols)
     local = parts.withColumn("__local_rn", F.row_number().over(w_local))
     counts = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
@@ -78,9 +107,7 @@ def with_running_sum(
     every row; this stays parallel at any scale. ``order_cols`` must be
     a unique total order for a deterministic result.
     """
-    parts = df.repartitionByRange(
-        *([num_partitions] if num_partitions else []), *order_cols
-    ).withColumn("__pid", F.spark_partition_id())
+    parts = _range_parts(df, order_cols, num_partitions)
     w_local = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)
@@ -132,4 +159,39 @@ def with_ntile(
     return (
         with_n.withColumn(out_col, bucket.cast("int"))
         .drop("__rn", "__n")
+    )
+
+
+def doubled_midrank(value, *partition_cols) -> Column:
+    """Doubled average rank of ``value`` within ``partition_cols``
+    (over all rows when none are given): ``2*rank() + ties - 1``, an
+    exact integer."""
+    w_rank = Window.partitionBy(*partition_cols).orderBy(value)
+    w_tie = Window.partitionBy(*partition_cols, value)
+    return 2 * F.rank().over(w_rank) + F.count(F.lit(1)).over(w_tie) - 1
+
+
+def value_ranks(df: DataFrame, value: str, *flags: str) -> DataFrame:
+    """One row per distinct ``value`` of ``df``: ``c`` (its row count),
+    one count per boolean ``flags`` column (under the flag's name), and
+    for each count a ``<name>_below`` column holding the same count over
+    all strictly smaller values.
+
+    A row at ``value`` then has the doubled mid-rank
+    ``2*c_below + c + 1``, and within the rows where flag ``f`` holds,
+    ``2*f_below + f + 1``. One ordered window runs over the
+    distinct-value table; the rows are only grouped.
+    """
+    counts = ["c", *flags]
+    per_value = df.groupBy(value).agg(
+        F.count(F.lit(1)).alias("c"),
+        *[F.count(F.when(F.col(f), 1)).alias(f) for f in flags],
+    )
+    w = Window.orderBy(value).rowsBetween(Window.unboundedPreceding, -1)
+    return per_value.select(
+        "*",
+        *[
+            F.coalesce(F.sum(k).over(w), F.lit(0)).alias(f"{k}_below")
+            for k in counts
+        ],
     )

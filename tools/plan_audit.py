@@ -62,12 +62,14 @@ def main() -> None:
         "subtree is re-printed under every cache consumer but executes once,",
         "so verbatim reprints are deduplicated (real nodes stay distinct via",
         "expr ids). 'shuffles' counts `Exchange hashpartitioning` (the",
-        "scale-determining cost); 'python' counts Arrow-batched Python",
+        "scale-determining cost); 'single' counts `Exchange SinglePartition`",
+        "(an unpartitioned window or global sort: one task holds every row);",
+        "'python' counts Arrow-batched Python",
         "stages (0 for every relational op — only geo/multimodal use them,",
         "by design).",
         "",
-        "| query | shuffles | broadcasts | BHJ | SMJ | top-k | python | pushed filters | read schema |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | single | broadcasts | BHJ | SMJ | top-k | python | pushed filters | read schema |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for spec in _ALL:
         df = spec.fn(spark, sf_dir)
@@ -77,7 +79,7 @@ def main() -> None:
         pushed = "; ".join(p for p in a["pushed"] if p)[:80] or "—"
         schema = (a["schemas"][0][:60] + "…") if a["schemas"] else "—"
         lines.append(
-            f"| {spec.name} | {a['shuffles']} | {a['broadcasts']} | {a['bhj']} "
+            f"| {spec.name} | {a['shuffles']} | {a['single']} | {a['broadcasts']} | {a['bhj']} "
             f"| {a['smj']} | {'✓' if a['takeordered'] else '—'} | {a['python']} "
             f"| `{pushed}` | `{schema}` |"
         )
